@@ -42,20 +42,16 @@ from concurrent.futures import TimeoutError as FuturesTimeoutError
 from dataclasses import dataclass, field
 from typing import Any, Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Tuple, Union
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .cache import LookupCacheConfig, LruTtlCache, shared_cache
+from .cache import LruTtlCache, shared_cache
 from .client import HttpPollingClient
 from .options import HttpLookupOptions
-from .types import (
-    METADATA_COLUMN_NAMES,
-    HttpCompletionState,
-    HttpLookupResult,
-    metadata_schema,
-)
+from .types import HttpCompletionState, HttpLookupResult, metadata_schema
 
 __all__ = ["HttpLookupTable", "http_lookup_join"]
 
@@ -336,6 +332,36 @@ def _noop_add(_n: int) -> None:
     pass
 
 
+def _store_result(distinct: Dict, cache: Optional[LruTtlCache], kt: Tuple,
+                  result: HttpLookupResult) -> None:
+    """Record a key's fetched result for this batch, and cache it when it
+    succeeded with rows (or empty, under ``cache_missing_key``)."""
+    distinct[kt] = result
+    if cache is not None and result.completion_state == HttpCompletionState.SUCCESS and (
+        result.rows or cache.config.cache_missing_key
+    ):
+        cache.put(kt, result)
+
+
+def _lookup_value(kt: Tuple, row: Optional[Mapping], f: T.StructField,
+                  key_pos: Optional[int]) -> Any:
+    """One output lookup value: ``row``'s field coerced to its declared
+    type; a null join key is backfilled from the probe key ``kt``."""
+    if row is None:  # null-enrichment row
+        return None
+    value = _coerce(row.get(f.name), f.dataType)
+    return kt[key_pos] if value is None and key_pos is not None else value
+
+
+#: metadata column name → its value for one lookup result
+_METADATA = {
+    "error-string": lambda r: r.error_string,
+    "http-status-code": lambda r: r.status_code,
+    "http-headers": lambda r: dict(r.headers) if r.headers else None,
+    "http-completion-state": lambda r: r.completion_state.value,
+}
+
+
 def _enrich_pdf(
     cfg: "_EnrichConfig",
     client: HttpPollingClient,
@@ -346,20 +372,16 @@ def _enrich_pdf(
 ) -> Optional[pd.DataFrame]:
     """Enrich ONE probe batch (pandas DataFrame) with HTTP lookups:
     distinct-key dedup, cache probe + ETag revalidation, thread-pooled /
-    multi-key-batch fetch, then row assembly with emptiness rule, key
-    backfill, array multiply and metadata columns. Returns the enriched
-    frame (column order = ``cfg.out_col_names``), or ``None`` for an
-    empty batch. Extracted from the round-1..9 ``mapInPandas`` closure
-    verbatim so the SQL UDTF shares it."""
+    multi-key-batch fetch, then row assembly; shared by the ``mapInPandas``
+    operator and the SQL UDTF. Assembly (coercion, key backfill, emptiness
+    rule, array multiply, metadata) runs once per distinct key; one gather
+    by each probe row's key code then emits every probe row, in order,
+    once per result row of its key. Probe columns keep their dtype; lookup
+    and metadata columns are ``object``. Returns the enriched frame
+    (column order = ``cfg.out_col_names``), or ``None`` for an empty
+    batch."""
     pairs = list(cfg.pairs)
     pool_size = max(1, cfg.table.options.pull_pool_size)
-    probe_col_names = list(cfg.probe_col_names)
-    output_lookup_fields = list(cfg.output_lookup_fields)
-    lookup_prefix = cfg.lookup_prefix
-    key_lookup_names = list(cfg.key_lookup_names)
-    meta_names = list(cfg.meta_names)
-    meta_fields = bool(cfg.meta_names)
-    emit_on_empty = cfg.emit_on_empty
     n = len(pdf)
     if n == 0:
         return None
@@ -372,10 +394,13 @@ def _enrich_pdf(
             key_cols.append(root.tolist())
         else:
             key_cols.append([_extract_path(v, path[1:]) for v in root])
-    row_keys: List[Tuple] = list(zip(*key_cols))
-    distinct: Dict[Tuple, Optional[HttpLookupResult]] = {}
-    for kt in row_keys:
-        distinct.setdefault(kt, None)
+    # each probe row's code is its key's position in ``distinct``
+    positions: Dict[Tuple, int] = {}
+    codes = np.fromiter(
+        (positions.setdefault(kt, len(positions)) for kt in zip(*key_cols)),
+        dtype=np.intp, count=n,
+    )
+    distinct: Dict[Tuple, Optional[HttpLookupResult]] = dict.fromkeys(positions)
 
     # --- cache probe + thread-pooled fetch ----------------------------
     to_fetch: List[Tuple] = []
@@ -470,13 +495,10 @@ def _enrich_pdf(
                 for kt, etag, prev in to_revalidate
             ]
         for kt, result, fresh in revalidated:
-            distinct[kt] = result
-            if fresh and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)  # 304 → same body, fresh TTL
+            # 304 → same body, fresh TTL; a stale fallback is not re-cached
+            _store_result(distinct, cache if fresh else None, kt, result)
 
+    fetched: List[Tuple[Tuple, HttpLookupResult]] = []
     if to_fetch and batch_size:
         # multi-key batch mode: N distinct keys per request; chunks
         # fetch concurrently on the pull pool under use_async
@@ -564,13 +586,6 @@ def _enrich_pdf(
             fetched = [
                 pair for chunk in chunks for pair in fetch_chunk(chunk)
             ]
-        for kt, result in fetched:
-            distinct[kt] = result
-            if cache is not None and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)
     elif to_fetch:
         _maybe_advise_batch_lookup(len(to_fetch))
         if not cfg.table.options.use_async or len(to_fetch) == 1:
@@ -629,55 +644,42 @@ def _enrich_pdf(
                 # (abandoned sockets still die at request_timeout)
                 publish_pool.shutdown(wait=False, cancel_futures=True)
                 pull_pool.shutdown(wait=False, cancel_futures=True)
-        for kt, result in fetched:
-            distinct[kt] = result
-            if cache is not None and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)
 
-    # --- assemble output rows -----------------------------------------
-    out_cols: Dict[str, List[Any]] = {name: [] for name in list(cfg.out_col_names)}
-    probe_values = {name: pdf[name].tolist() for name in probe_col_names}
+    for kt, result in fetched:
+        _store_result(distinct, cache, kt, result)
 
-    for i in range(n):
-        result = distinct[row_keys[i]]
-        assert result is not None
-        rows = result.rows
-        if not rows:
-            if not emit_on_empty:
-                continue
-            rows = [None]  # one null-enrichment row
-        for row in rows:
-            for name in probe_col_names:
-                out_cols[name].append(probe_values[name][i])
-            for f in output_lookup_fields:
-                name = f"{lookup_prefix}{f.name}"
-                if row is None:
-                    out_cols[name].append(None)
-                    continue
-                value = _coerce(row.get(f.name), f.dataType)
-                # join-key backfill: null result key ← probe value
-                if value is None and f.name in key_lookup_names:
-                    idx = key_lookup_names.index(f.name)
-                    value = row_keys[i][idx]
-                out_cols[name].append(value)
-            if meta_fields:
-                meta_map = {
-                    "error-string": result.error_string,
-                    "http-status-code": result.status_code,
-                    "http-headers": dict(result.headers) if result.headers else None,
-                    "http-completion-state": result.completion_state.value,
-                }
-                for mname in meta_names:
-                    out_cols[f"{lookup_prefix}{mname}"].append(meta_map[mname])
+    # --- assemble once per distinct key, then gather to probe rows ----
+    # entries: each key's output rows in key order — none (inner join,
+    # empty result), one null-enrichment row, or N (array result)
+    counts = np.empty(len(distinct), dtype=np.intp)
+    entries: List[Tuple[Tuple, HttpLookupResult, Any]] = []
+    for pos, (kt, result) in enumerate(distinct.items()):
+        rows = result.rows or ([None] if cfg.emit_on_empty else [])
+        counts[pos] = len(rows)
+        entries.extend((kt, result, row) for row in rows)
 
-    out = pd.DataFrame(
-        {name: pd.Series(values, dtype="object")
-         for name, values in out_cols.items()}
-    )
-    return out
+    def per_key(values: Iterable[Any]) -> np.ndarray:
+        return np.fromiter(values, dtype=object, count=len(entries))
+
+    prefix, key_names = cfg.lookup_prefix, cfg.key_lookup_names
+    columns: Dict[str, np.ndarray] = {}
+    for f in cfg.output_lookup_fields:
+        key_pos = key_names.index(f.name) if f.name in key_names else None
+        columns[f"{prefix}{f.name}"] = per_key(
+            _lookup_value(kt, row, f, key_pos) for kt, _result, row in entries)
+    for m in cfg.meta_names:
+        columns[f"{prefix}{m}"] = per_key(
+            _METADATA[m](result) for _kt, result, _row in entries)
+
+    # probe row i takes its key's counts[codes[i]] entries, in order
+    per_row = counts[codes]
+    probe_idx = np.repeat(np.arange(n), per_row)
+    first_entry = np.cumsum(counts) - counts
+    run_start = np.cumsum(per_row) - per_row
+    result_idx = np.repeat(first_entry[codes] - run_start, per_row) + np.arange(len(probe_idx))
+    out = {name: pdf[name].array.take(probe_idx) for name in cfg.probe_col_names}
+    out.update((name, values[result_idx]) for name, values in columns.items())
+    return pd.DataFrame(out, copy=False)
 
 
 def http_lookup_join(
@@ -743,11 +745,8 @@ def http_lookup_join(
     else:
         output_lookup_fields = list(table.schema.fields)
 
+    # metadata_schema rejects unknown names
     meta_fields = list(metadata_schema(metadata_columns).fields) if metadata_columns else []
-    if metadata_columns:
-        unknown = set(metadata_columns) - set(METADATA_COLUMN_NAMES)
-        if unknown:
-            raise ValueError(f"unknown metadata columns {sorted(unknown)}")
 
     probe_fields = list(probe.schema.fields)
     probe_names = {f.name for f in probe_fields}
@@ -765,7 +764,6 @@ def http_lookup_join(
     out_schema = T.StructType(out_fields)
 
     probe_col_names = [f.name for f in probe_fields]
-    lookup_out_names = [f.name for f in output_lookup_fields]
     meta_names = [f.name for f in meta_fields]
     key_lookup_names = [lk for _, lk in pairs]
     emit_on_empty = how == "left" or bool(meta_fields)

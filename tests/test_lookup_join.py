@@ -198,6 +198,56 @@ def test_array_result_multiplies_probe_rows(spark, stub_server):
     assert names == ["alice", "alice2"]
 
 
+def test_probe_columns_round_trip_unchanged_in_non_utc_session(spark, stub_server):
+    # probe columns leave the operator with the pandas dtype they arrived
+    # with; every type must come back from Spark exactly as it went in
+    import datetime as dt
+    from decimal import Decimal
+
+    stub_server.stub("/customers", customers_responder)
+    table = HttpLookupTable(
+        url=stub_server.url("/customers"), schema=CUSTOMER_SCHEMA)
+    probe_schema = T.StructType([
+        T.StructField("order_id", T.LongType(), False),
+        T.StructField("cust_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("amount", T.DecimalType(12, 3)),
+        T.StructField("addr", T.StructType([
+            T.StructField("city", T.StringType()),
+            T.StructField("zip", T.IntegerType()),
+        ])),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField("qty", T.LongType()),
+    ])
+    data = [
+        (100, 1, dt.datetime(2024, 3, 10, 1, 30), Decimal("12.345"),
+         ("Oslo", 150), ["a", "b"], 2**40 + 1),
+        (101, 2, dt.datetime(2024, 3, 10, 3, 30), Decimal("-0.001"),
+         None, [], None),
+        (102, 3, None, None, ("Lima", None), None, 7),
+        (103, 2, dt.datetime(2024, 11, 3, 1, 15), Decimal("999999999.999"),
+         ("Pune", 411001), [None, "c"], None),
+        (104, 1, dt.datetime(1969, 12, 31, 23, 59, 59, 999999), Decimal("0"),
+         ("Oslo", 150), ["d"], -(2**40)),
+    ]
+    saved_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        probe = spark.createDataFrame(data, probe_schema).coalesce(1)
+        out = http_lookup_join(
+            probe, table, on={"cust_id": "id"}, select=["name"])
+        probe_cols = [f.name for f in probe_schema.fields]
+        assert out.schema.fields[:len(probe_cols)] == probe_schema.fields
+        got = {r.order_id: r for r in out.select(*probe_cols).collect()}
+        want = {r.order_id: r for r in probe.collect()}
+        names = {r.order_id: r.name for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved_tz)
+    assert got == want
+    assert names == {100: "alice", 101: "bob", 102: "carol",
+                     103: "bob", 104: "alice"}
+
+
 def test_undecodable_body_metadata_state(spark, stub_server):
     stub_server.stub("/bad", lambda _r: StubResponse(status=200, body=b"not json"))
     table = HttpLookupTable(

@@ -389,6 +389,21 @@ class TestHttpLookupUdtf:
         assert {(r.id, r.name) for r in rows} == {(1, "alice"), (2, "bob")}
         assert len(stub_server.recorded("/people")) == 2
 
+        # the buffered flush hands back plain Python scalars, not numpy ones
+        from pyspark.sql import Row
+
+        from flink_connector_http_spark.sqlfn import HttpLookupUdtf
+
+        udtf = HttpLookupUdtf()
+        kwargs = dict(url=stub_server.url("/people"), on="id",
+                      schema="id BIGINT, name STRING", select="name")
+        out = [t for v in range(4)
+               for t in udtf.eval(Row(id=v % 2 + 1, v=v), **kwargs)]
+        out += list(udtf.terminate())
+        assert out == [(1, 0, "alice"), (2, 1, "bob"), (1, 2, "alice"),
+                       (2, 3, "bob")]
+        assert {type(x) for t in out for x in t} == {int, str}
+
     def test_left_join_missing_keys_null_enrichment(self, spark, stub_server):
         from flink_connector_http_spark.sqlfn import register_http_sql_functions
 
