@@ -40,6 +40,7 @@ bounded in-flight pool; nothing funnels through the driver.
 
 from __future__ import annotations
 
+import http.client
 import json
 import re
 from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
@@ -180,6 +181,37 @@ def _coerce_record(rec: Dict[str, Any], schema: T.StructType) -> tuple:
     from .lookup import _coerce
 
     return tuple(_coerce(rec.get(f.name), f.dataType) for f in schema.fields)
+
+
+def _arrow_column(values: List[Any], arrow_type, data_type: T.DataType):
+    """One page column → one Arrow array of ``arrow_type``, equal to
+    ``pa.array([_coerce(v, data_type) for v in values], type=arrow_type)``.
+
+    ``pa.array(values)`` converts the column in C once. Its result is kept
+    when its type is ``arrow_type``; an all-null column becomes
+    ``pa.nulls``; an integer column may take a safe cast to a narrower
+    integer or to a float type (a safe cast refuses any value it cannot
+    represent exactly). Every other outcome — another inferred type, an
+    inference error or a refused cast — falls back to ``_coerce`` per value
+    for this column only, which stays the definition for JSON strings in
+    number columns, ISO timestamps, bool strings and the like."""
+    import pyarrow as pa
+
+    try:
+        arr = pa.array(values)
+        if arr.type == arrow_type:
+            return arr
+        if pa.types.is_null(arr.type):
+            return pa.nulls(len(arr), arrow_type)
+        if pa.types.is_integer(arr.type) and (
+            pa.types.is_integer(arrow_type) or pa.types.is_floating(arrow_type)
+        ):
+            return arr.cast(arrow_type, safe=True)
+    except (pa.ArrowException, OverflowError):
+        pass  # the per-value path below decides, or raises
+    from .lookup import _coerce
+
+    return pa.array([_coerce(v, data_type) for v in values], type=arrow_type)
 
 
 class _PageRange(InputPartition):
@@ -340,18 +372,43 @@ class HttpBatchReader(DataSourceReader):
     ) -> List[dict]:
         from urllib.parse import urlencode
 
+        from .client import _retry_after_hint
         from .request import HttpRequestSpec
+        from .retry import HttpRetryError, RetryConfig, run_with_retry
+        from .status import HttpResponseChecker
 
-        if limiter is not None:
-            limiter.acquire()
         params = {self.page_param: page, **self.pushed_params}
         sep = "&" if "?" in self.url else "?"
         url = f"{self.url}{sep}{urlencode(params)}"
         spec = HttpRequestSpec(method="GET", url=url, headers=headers(),
                                body=None)
-        resp = transport.send(spec)
-        if resp.status != 200:
-            raise IOError(f"HTTP read: page {page} returned status {resp.status}")
+
+        def fire():
+            # every wire attempt, retries included, takes a permit
+            if limiter is not None:
+                limiter.acquire()
+            return transport.send(spec)
+
+        # a transient page error is retried here with the lookup client's
+        # policy instead of failing the task, which would make Spark
+        # re-read the whole partition
+        try:
+            resp = run_with_retry(
+                fire,
+                config=RetryConfig(),
+                status_of=lambda r: r.status,
+                is_retriable_status=HttpResponseChecker().is_temporal_error,
+                retriable_exceptions=(OSError, http.client.HTTPException),
+                retry_after_of=_retry_after_hint,
+            )
+        except HttpRetryError as err:
+            if err.cause is not None:
+                raise err.cause
+            status = err.status_code
+        else:
+            status = resp.status
+        if status != 200:
+            raise IOError(f"HTTP read: page {page} returned status {status}")
         decoded = decoder(resp.body)
         if isinstance(decoded, dict):
             decoded = [decoded]
@@ -382,21 +439,28 @@ class HttpBatchReader(DataSourceReader):
 
     def _emit_page(self, records: List[dict], arrow_schema):
         """One fetched page → one Arrow RecordBatch (columnar transfer to
-        the JVM, no per-row pickling) when the schema allows, else rows."""
-        rows = [_coerce_record(rec, self.read_schema) for rec in records]
+        the JVM, no per-row pickling) when the schema allows, else rows.
+
+        The batch is built column by column: each column gathers
+        ``rec.get(name)`` over the page and converts with one
+        ``pa.array`` call, falling back to per-value ``_coerce`` only for
+        a column whose JSON values do not already carry the declared type
+        (see :func:`_arrow_column`). Without an Arrow schema every record
+        becomes a ``_coerce_record`` tuple."""
         if arrow_schema is None:
-            yield from rows
+            yield from (_coerce_record(rec, self.read_schema) for rec in records)
             return
         import pyarrow as pa
 
         cols = [
-            pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-            for i in range(len(arrow_schema))
+            _arrow_column(
+                [rec.get(f.name) for rec in records], af.type, f.dataType
+            )
+            for f, af in zip(self.read_schema.fields, arrow_schema)
         ]
         yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
     def read(self, partition: InputPartition):
-        from .auth import AUTHORIZATION, basic_auth_value, preprocess_headers
         from .client import HttpTransport
 
         transport = HttpTransport(
@@ -677,7 +741,6 @@ class HttpPollingStreamReader(SimpleDataSourceStreamReader):
     def _fetch_page(self, page: int) -> List[dict]:
         from urllib.parse import urlencode
 
-        from .auth import AUTHORIZATION, basic_auth_value, preprocess_headers
         from .client import HttpTransport
         from .request import HttpRequestSpec
 
@@ -780,7 +843,6 @@ class HttpDistributedStreamReader(DataSourceStreamReader):
 
     def _head_pages(self) -> int:
         """One driver-side GET against the head endpoint."""
-        from .auth import AUTHORIZATION, basic_auth_value, preprocess_headers
         from .client import HttpTransport
         from .request import HttpRequestSpec
 

@@ -57,6 +57,70 @@ def test_read_paged_parallel(spark, stub):
     )
     assert rows == want
 
+    # typed columns: even pages carry native JSON values, odd pages the
+    # same values as JSON strings; both decode to the same rows
+    native = [
+        {"k": 0, "n": 1, "v": 0.5, "ok": True, "d": "2024-01-02",
+         "ts": "2024-01-02T03:04:05Z"},
+        {"k": 1, "n": -(2**31), "v": 3, "ok": False, "d": "1999-12-31",
+         "ts": "1999-12-31T23:59:59.250000+00:00"},
+        {"k": 2, "n": 2**31 - 1, "v": 2**53, "ok": None},
+    ]
+
+    def as_string(v):
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        return v if v is None else str(v)
+
+    typed = [
+        [
+            {**({f: as_string(v) for f, v in r.items()} if p % 2 else r),
+             "k": r["k"] + 10 * p}
+            for r in native
+        ]
+        for p in range(4)
+    ]
+    stub.stub("/typed", _paged_responder(typed))
+    df = (
+        spark.read.format("http")
+        .schema("k BIGINT, n INT, v DOUBLE, ok BOOLEAN, d DATE, ts TIMESTAMP")
+        .option("url", stub.url("/typed"))
+        .option("pages", 4)
+        .load()
+        .selectExpr("k % 10 AS k", "k DIV 10 AS p", "n", "v", "ok",
+                    "string(d) AS d", "string(ts) AS ts")
+    )
+    by_page = {}
+    for r in df.collect():
+        by_page.setdefault(r.p, []).append((r.k, r.n, r.v, r.ok, r.d, r.ts))
+    want = [
+        (0, 1, 0.5, True, "2024-01-02", "2024-01-02 03:04:05"),
+        (1, -(2**31), 3.0, False, "1999-12-31", "1999-12-31 23:59:59.25"),
+        (2, 2**31 - 1, float(2**53), None, None, None),
+    ]
+    assert {p: sorted(rows) for p, rows in by_page.items()} == {
+        p: want for p in range(4)
+    }
+
+
+def test_read_retries_transient_page_error(spark, stub):
+    page = [{"id": i, "name": f"n{i}", "score": i / 2} for i in range(3)]
+    stub.stub_sequence("/items", [
+        StubResponse(status=503, body=b"busy"),
+        json_response(page),
+    ])
+    df = (
+        spark.read.format("http")
+        .schema(SCHEMA)
+        .option("url", stub.url("/items"))
+        .option("pages", 1)
+        .load()
+    )
+    rows = sorted((r.id, r.name, r.score) for r in df.collect())
+    assert rows == [(p["id"], p["name"], p["score"]) for p in page]
+    # the 503 was retried inside the task: one retry, no partition re-read
+    assert len(stub.recorded("/items")) == 2
+
 
 def test_read_unpaged_until_empty(spark, stub):
     pages = [[{"id": 1, "name": "a", "score": 0.5}], [{"id": 2, "name": "b", "score": 1.5}]]
