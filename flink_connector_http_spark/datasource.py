@@ -187,26 +187,18 @@ def _arrow_column(values: List[Any], arrow_type, data_type: T.DataType):
     """One page column → one Arrow array of ``arrow_type``, equal to
     ``pa.array([_coerce(v, data_type) for v in values], type=arrow_type)``.
 
-    ``pa.array(values)`` converts the column in C once. Its result is kept
-    when its type is ``arrow_type``; an all-null column becomes
-    ``pa.nulls``; an integer column may take a safe cast to a narrower
-    integer or to a float type (a safe cast refuses any value it cannot
-    represent exactly). Every other outcome — another inferred type, an
-    inference error or a refused cast — falls back to ``_coerce`` per value
-    for this column only, which stays the definition for JSON strings in
-    number columns, ISO timestamps, bool strings and the like."""
+    ``pa.array(values)`` converts the column in C once, and its result is
+    kept when its type is ``arrow_type``. Every other outcome — another
+    inferred type (an all-null column, ints in an INT or DOUBLE column) or
+    an inference error — falls back to ``_coerce`` per value for this
+    column only, which stays the definition for JSON strings in number
+    columns, ISO dates and timestamps, bool strings and the like."""
     import pyarrow as pa
 
     try:
         arr = pa.array(values)
         if arr.type == arrow_type:
             return arr
-        if pa.types.is_null(arr.type):
-            return pa.nulls(len(arr), arrow_type)
-        if pa.types.is_integer(arr.type) and (
-            pa.types.is_integer(arrow_type) or pa.types.is_floating(arrow_type)
-        ):
-            return arr.cast(arrow_type, safe=True)
     except (pa.ArrowException, OverflowError):
         pass  # the per-value path below decides, or raises
     from .lookup import _coerce
