@@ -29,7 +29,7 @@ import weakref
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
 from concurrent.futures import TimeoutError as _FuturesTimeout
 from concurrent.futures import wait as _futures_wait
-from typing import Any, Dict, List, Mapping, Optional, Tuple
+from typing import Any, Callable, Dict, List, Mapping, Optional, Tuple
 
 from .auth import (
     AUTHORIZATION,
@@ -48,10 +48,18 @@ from .retry import (
     CircuitBreaker,
     HttpRetryError,
     RetryBudget,
+    RetryConfig,
     RetryStats,
     parse_retry_after,
     run_with_retry,
 )
+from .status import HttpResponseChecker, parse_http_codes
+from .tls import build_ssl_context
+from .types import HttpCompletionState, HttpLookupResult
+
+__all__ = ["HttpResponse", "HttpTransport", "HttpPollingClient", "send_with_retry"]
+
+logger = logging.getLogger(__name__)
 
 
 def _retry_after_hint(response: "HttpResponse"):
@@ -63,13 +71,45 @@ def _retry_after_hint(response: "HttpResponse"):
             if hint is not None:
                 return hint
     return None
-from .status import HttpResponseChecker, parse_http_codes
-from .tls import build_ssl_context
-from .types import HttpCompletionState, HttpLookupResult
 
-__all__ = ["HttpResponse", "HttpTransport", "HttpPollingClient"]
 
-logger = logging.getLogger(__name__)
+def send_with_retry(
+    send: Callable[[HttpRequestSpec], HttpResponse],
+    spec: HttpRequestSpec,
+    *,
+    config: RetryConfig,
+    is_retriable_status: Callable[[int], bool],
+    limiter: Optional[TokenBucket] = None,
+    stats: Optional[RetryStats] = None,
+    budget: Optional[RetryBudget] = None,
+) -> HttpResponse:
+    """Send ``spec`` through ``send`` with retries: the one retry path of
+    the lookup client, the sink, the ``http`` source and ``http_get_json``
+    (reference ``HttpClientWithRetry.java:44-92``).
+
+    Each wire attempt, retries included, takes one ``limiter`` permit.
+    ``OSError`` and ``http.client.HTTPException`` (BadStatusLine, a corrupt
+    compressed body) are retried, as is a status ``is_retriable_status``
+    accepts, after ``max(policy delay, Retry-After)`` capped at the
+    backoff ceiling. Returns the first other response; raises
+    :class:`HttpRetryError` when the attempts or the ``budget`` run out."""
+
+    def attempt() -> HttpResponse:
+        if limiter is not None:
+            limiter.acquire()
+        return send(spec)
+
+    return run_with_retry(
+        attempt,
+        config=config,
+        status_of=lambda r: r.status,
+        is_retriable_status=is_retriable_status,
+        retriable_exceptions=(OSError, http.client.HTTPException),
+        stats=stats,
+        retry_after_of=_retry_after_hint,
+        budget=budget,
+    )
+
 
 # default R11/R12 wiring: every exchange is loggable, but the hot path only
 # pays an isEnabledFor check unless debug logging is on (the reference's
@@ -330,10 +370,13 @@ class HttpTransport:
                 resp = conn.getresponse()
                 body = resp.read()
                 return HttpResponse(resp.status, list(resp.getheaders()), body)
-            except (http.client.HTTPException, ConnectionError, OSError):
+            except (http.client.HTTPException, ConnectionError, OSError) as err:
                 conn.close()
                 self._local.conns.pop((parsed.scheme, parsed.netloc), None)
-                if attempt == 1 or not resend_ok:
+                # a stale socket fails with a reset or RemoteDisconnected,
+                # never a timeout: re-sending a timed-out request would only
+                # double the wait on a silent endpoint
+                if attempt == 1 or not resend_ok or isinstance(err, TimeoutError):
                     raise
 
 
@@ -575,27 +618,14 @@ class HttpPollingClient:
         if breaker is not None and not breaker.allow():
             return (spec, None, ("circuit breaker open: failing fast", None))
 
-        def _fire() -> HttpResponse:
-            # each wire attempt (including retries) consumes a permit —
-            # the limiter bounds actual requests hitting the endpoint
-            if self.rate_limiter is not None:
-                self.rate_limiter.acquire()
-            return self._send_wire(spec)
-
         try:
-            response = run_with_retry(
-                _fire,
+            response = send_with_retry(
+                self._send_wire,
+                spec,
                 config=self.options.retry,
-                status_of=lambda r: r.status,
                 is_retriable_status=self.checker.is_temporal_error,
-                # reference retries IOException (HttpClientWithRetry.java:44-92);
-                # http.client.HTTPException covers e.g. BadStatusLine from a
-                # flaky upstream, which is the same transport-failure class
-                retriable_exceptions=(OSError, http.client.HTTPException),
+                limiter=self.rate_limiter,
                 stats=self.retry_stats,
-                # honor the server's Retry-After hint on 429/503 (capped
-                # at the backoff ceiling — see run_with_retry)
-                retry_after_of=_retry_after_hint,
                 budget=self.retry_budget,
             )
         except HttpRetryError as err:

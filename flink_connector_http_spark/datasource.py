@@ -40,10 +40,10 @@ bounded in-flight pool; nothing funnels through the driver.
 
 from __future__ import annotations
 
-import http.client
 import json
 import re
 from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
+from urllib.parse import urlencode
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -98,25 +98,65 @@ def _require_url(options: Dict[str, str]) -> str:
     )
 
 
-def _transport_kwargs(options: Dict[str, str]) -> Dict[str, Any]:
-    """TLS/self-signed transport options (parity with the lookup/sink
-    sides — the reference shares http.security.* across every surface
-    via its common client factory)."""
-    kw: Dict[str, Any] = {}
-    if "server_ca" in options:
-        kw["server_ca"] = options["server_ca"]
-    if "client_cert" in options:
-        kw["client_cert"] = options["client_cert"]
-    if "client_key" in options:
-        kw["client_key"] = options["client_key"]
-    if options.get("allow_self_signed", "").lower() in ("true", "1", "yes"):
-        kw["allow_self_signed"] = True
-    for opt in ("proxy_host", "proxy_user", "proxy_password"):
-        if opt in options:
-            kw[opt] = options[opt]
-    if "proxy_port" in options:
-        kw["proxy_port"] = int(options["proxy_port"])
-    return kw
+def _transport(options: Dict[str, str]):
+    """The ``HttpTransport`` of the source's GETs: the ``timeout`` option
+    plus TLS and proxy settings (parity with the lookup/sink sides — the
+    reference shares http.security.* across every surface via its common
+    client factory)."""
+    from .client import HttpTransport
+
+    return HttpTransport(
+        timeout=float(options.get("timeout", "30")),
+        allow_self_signed=options.get("allow_self_signed", "").lower()
+        in ("true", "1", "yes"),
+        proxy_port=int(options["proxy_port"]) if "proxy_port" in options else None,
+        **{
+            opt: options[opt]
+            for opt in ("server_ca", "client_cert", "client_key",
+                        "proxy_host", "proxy_user", "proxy_password")
+            if opt in options
+        },
+    )
+
+
+def _with_params(url: str, params: Dict[str, Any]) -> str:
+    """``url`` with ``params`` appended to its query string."""
+    if not params:
+        return url
+    sep = "&" if "?" in url else "?"
+    return f"{url}{sep}{urlencode(params)}"
+
+
+def _get(transport, url: str, headers: Dict[str, str], what: str,
+         limiter=None, ok=(200,)):
+    """One GET under the default retry policy (``RetryConfig()``: three
+    retries 1 s apart on a 500/503/504 or a transport error, Retry-After
+    honoured), so a transient error costs one retried request instead of
+    a failed Spark task. A final status outside ``ok`` raises ``IOError``
+    naming ``what``; an exhausted transport error re-raises its cause."""
+    from .client import send_with_retry
+    from .request import HttpRequestSpec
+    from .retry import HttpRetryError, RetryConfig
+    from .status import HttpResponseChecker
+
+    spec = HttpRequestSpec(method="GET", url=url, headers=headers, body=None)
+    try:
+        resp = send_with_retry(
+            transport.send,
+            spec,
+            config=RetryConfig(),
+            is_retriable_status=HttpResponseChecker().is_temporal_error,
+            limiter=limiter,
+        )
+    except HttpRetryError as err:
+        if err.cause is not None:
+            raise err.cause
+        status = err.status_code
+    else:
+        status = resp.status
+    if status not in ok:
+        raise IOError(f"{what} returned status {status}")
+    return resp
 
 
 def _auth_headers_factory(options: Dict[str, str]):
@@ -321,24 +361,12 @@ class HttpBatchReader(DataSourceReader):
         page. Costs one duplicate fetch of page 0 (the planner's copy is
         discarded; partition 0 re-reads it), which buys a fan-out of the
         remaining N-1 pages across the cluster."""
-        from urllib.parse import urlencode
-
-        from .client import HttpTransport
-        from .request import HttpRequestSpec
-
         try:
-            transport = HttpTransport(
-                timeout=self.timeout, **_transport_kwargs(self.options)
-            )
-            headers = _auth_headers_factory(self.options)
             params = {self.page_param: 0, **self.pushed_params}
-            sep = "&" if "?" in self.url else "?"
-            resp = transport.send(HttpRequestSpec(
-                method="GET", url=f"{self.url}{sep}{urlencode(params)}",
-                headers=headers(), body=None,
-            ))
-            if resp.status != 200:
-                return None
+            resp = _get(
+                _transport(self.options), _with_params(self.url, params),
+                _auth_headers_factory(self.options)(), "HTTP read: planning probe",
+            )
             total = None
             want = self.total_count_header.lower()
             for name, value in resp.headers:
@@ -362,45 +390,11 @@ class HttpBatchReader(DataSourceReader):
     def _fetch_page(
         self, transport, decoder, headers, page: int, limiter=None
     ) -> List[dict]:
-        from urllib.parse import urlencode
-
-        from .client import _retry_after_hint
-        from .request import HttpRequestSpec
-        from .retry import HttpRetryError, RetryConfig, run_with_retry
-        from .status import HttpResponseChecker
-
         params = {self.page_param: page, **self.pushed_params}
-        sep = "&" if "?" in self.url else "?"
-        url = f"{self.url}{sep}{urlencode(params)}"
-        spec = HttpRequestSpec(method="GET", url=url, headers=headers(),
-                               body=None)
-
-        def fire():
-            # every wire attempt, retries included, takes a permit
-            if limiter is not None:
-                limiter.acquire()
-            return transport.send(spec)
-
-        # a transient page error is retried here with the lookup client's
-        # policy instead of failing the task, which would make Spark
-        # re-read the whole partition
-        try:
-            resp = run_with_retry(
-                fire,
-                config=RetryConfig(),
-                status_of=lambda r: r.status,
-                is_retriable_status=HttpResponseChecker().is_temporal_error,
-                retriable_exceptions=(OSError, http.client.HTTPException),
-                retry_after_of=_retry_after_hint,
-            )
-        except HttpRetryError as err:
-            if err.cause is not None:
-                raise err.cause
-            status = err.status_code
-        else:
-            status = resp.status
-        if status != 200:
-            raise IOError(f"HTTP read: page {page} returned status {status}")
+        resp = _get(
+            transport, _with_params(self.url, params), headers(),
+            f"HTTP read: page {page}", limiter,
+        )
         decoded = decoder(resp.body)
         if isinstance(decoded, dict):
             decoded = [decoded]
@@ -453,11 +447,7 @@ class HttpBatchReader(DataSourceReader):
         yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
     def read(self, partition: InputPartition):
-        from .client import HttpTransport
-
-        transport = HttpTransport(
-            timeout=self.timeout, **_transport_kwargs(self.options)
-        )
+        transport = _transport(self.options)
         decoder = self.decoder
         headers = _auth_headers_factory(self.options)
         limiter = None
@@ -510,21 +500,12 @@ class HttpBatchReader(DataSourceReader):
     def _read_cursor_chain(
         self, transport, decoder, headers, limiter, arrow_schema
     ):
-        from urllib.parse import urlencode
-
-        from .request import HttpRequestSpec
-
         cursor = None
         next_url = None
         seen = set()  # a server echoing a stale cursor must not loop us
         while True:
-            if limiter is not None:
-                limiter.acquire()
             if self.cursor_header:
-                url = next_url or self.url
-                if self.pushed_params and next_url is None:
-                    sep = "&" if "?" in url else "?"
-                    url = f"{url}{sep}{urlencode(self.pushed_params)}"
+                url = next_url or _with_params(self.url, self.pushed_params)
                 # seed with every FETCHED url (incl. page 1): a Link
                 # chain cycling back to the first page must error before
                 # re-emitting its rows, not after
@@ -533,19 +514,10 @@ class HttpBatchReader(DataSourceReader):
                 params = dict(self.pushed_params)
                 if cursor is not None:
                     params[self.cursor_param] = cursor
-                sep = "&" if "?" in self.url else "?"
-                url = (
-                    f"{self.url}{sep}{urlencode(params)}" if params
-                    else self.url
-                )
-            spec = HttpRequestSpec(
-                method="GET", url=url, headers=headers(), body=None
+                url = _with_params(self.url, params)
+            resp = _get(
+                transport, url, headers(), "HTTP read: cursor page", limiter
             )
-            resp = transport.send(spec)
-            if resp.status != 200:
-                raise IOError(
-                    f"HTTP read: cursor page returned status {resp.status}"
-                )
             decoded = decoder(resp.body)
             if self.cursor_header:
                 records = (
@@ -712,16 +684,13 @@ class HttpPollingStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options: Dict[str, str], schema: T.StructType) -> None:
+        # the batch reader supplies the url, page parameter, format decode
+        # and the column-wise page emission
+        self._batch = HttpBatchReader(options, schema)
         self.options = dict(options)
-        self.read_schema = schema
-        self.url = _require_url(options)
-        self.fmt = options.get("format", "json")
-        self.page_param = options.get("page_param", "page")
         self.max_pages_per_batch = max(
             1, int(options.get("max_pages_per_batch", "10"))
         )
-        self.timeout = float(options.get("timeout", "30"))
-        self._decoder = _resolve_format(options, self.fmt)
         self._transport = None
         # conditional-GET state for the poll hot loop: when caught up,
         # every trigger re-fetches the SAME head page — if the endpoint
@@ -729,37 +698,29 @@ class HttpPollingStreamReader(SimpleDataSourceStreamReader):
         # (one entry: only the most recent page URL is ever re-polled)
         self._cond_cache: Optional[Tuple[str, str, str, List[dict]]] = None
 
-    # -- transport bits shared with HttpBatchReader ------------------------
     def _fetch_page(self, page: int) -> List[dict]:
-        from urllib.parse import urlencode
-
-        from .client import HttpTransport
-        from .request import HttpRequestSpec
-
         if self._transport is None:
-            self._transport = HttpTransport(
-                timeout=self.timeout, **_transport_kwargs(self.options)
-            )
+            self._transport = _transport(self.options)
             self._headers = _auth_headers_factory(self.options)
-        sep = "&" if "?" in self.url else "?"
-        url = f"{self.url}{sep}{urlencode({self.page_param: page})}"
+        batch = self._batch
+        url = _with_params(batch.url, {batch.page_param: page})
         headers = dict(self._headers())
         cached = self._cond_cache
-        if cached is not None and cached[0] == url:
+        # a cached entry always carries an ETag or a Last-Modified
+        revalidate = cached is not None and cached[0] == url
+        if revalidate:
             _, etag, last_mod, _records = cached
             if etag:
                 headers["If-None-Match"] = etag
             if last_mod:
                 headers["If-Modified-Since"] = last_mod
-        resp = self._transport.send(
-            HttpRequestSpec(method="GET", url=url, headers=headers,
-                            body=None)
+        resp = _get(
+            self._transport, url, headers, f"HTTP stream: page {page}",
+            ok=(200, 304) if revalidate else (200,),
         )
-        if resp.status == 304 and cached is not None and cached[0] == url:
+        if resp.status == 304:
             return cached[3]  # not modified: the validated cached page
-        if resp.status != 200:
-            raise IOError(f"HTTP stream: page {page} returned status {resp.status}")
-        decoded = self._decoder(resp.body)
+        decoded = batch.decoder(resp.body)
         if isinstance(decoded, dict):
             decoded = [decoded]
         validators = {k.lower(): v for k, v in resp.headers}
@@ -767,9 +728,12 @@ class HttpPollingStreamReader(SimpleDataSourceStreamReader):
         last_mod = validators.get("last-modified", "")
         if etag or last_mod:
             self._cond_cache = (url, etag, last_mod, decoded)
-        elif cached is not None and cached[0] == url:
+        elif revalidate:
             self._cond_cache = None  # this URL stopped validating
         return decoded
+
+    def _emit(self, records: List[dict]):
+        return self._batch._emit_page(records, self._batch._arrow_schema())
 
     # -- SimpleDataSourceStreamReader contract -----------------------------
     def initialOffset(self) -> dict:
@@ -777,19 +741,18 @@ class HttpPollingStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         page = int(start["page"])
-        rows: List[tuple] = []
+        batches: list = []
         for _ in range(self.max_pages_per_batch):
             records = self._fetch_page(page)
             if not records:
                 break  # caught up: empty page = feed head
-            rows.extend(_coerce_record(r, self.read_schema) for r in records)
+            batches.extend(self._emit(records))
             page += 1
-        return iter(rows), {"page": page}
+        return iter(batches), {"page": page}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         for page in range(int(start["page"]), int(end["page"])):
-            for rec in self._fetch_page(page):
-                yield _coerce_record(rec, self.read_schema)
+            yield from self._emit(self._fetch_page(page))
 
     def commit(self, end: dict) -> None:
         pass  # the page cursor lives in the checkpoint; nothing to ack
@@ -829,28 +792,18 @@ class HttpDistributedStreamReader(DataSourceStreamReader):
         self.pages_per_partition = max(
             1, int(options.get("pages_per_partition", "1"))
         )
-        self.timeout = float(options.get("timeout", "30"))
         self._last: Optional[int] = None
         self._transport = None
 
     def _head_pages(self) -> int:
         """One driver-side GET against the head endpoint."""
-        from .client import HttpTransport
-        from .request import HttpRequestSpec
-
         if self._transport is None:
-            self._transport = HttpTransport(
-                timeout=self.timeout, **_transport_kwargs(self.options)
-            )
+            self._transport = _transport(self.options)
             self._headers = _auth_headers_factory(self.options)
-        resp = self._transport.send(HttpRequestSpec(
-            method="GET", url=self.pages_url, headers=self._headers(),
-            body=None
-        ))
-        if resp.status != 200:
-            raise IOError(
-                f"HTTP stream: head probe returned status {resp.status}"
-            )
+        resp = _get(
+            self._transport, self.pages_url, self._headers(),
+            "HTTP stream: head probe",
+        )
         payload = json.loads(resp.body)
         head = payload[self.pages_field] if isinstance(payload, dict) else payload
         return int(head)

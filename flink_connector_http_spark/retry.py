@@ -1,4 +1,4 @@
-"""Retry policies for lookup HTTP calls.
+"""Retry policies for every HTTP request (lookup, sink, source reads, UDTF).
 
 Parity targets:
 - strategies ``fixed-delay`` (default, 1s) and ``exponential-delay``
@@ -199,7 +199,7 @@ def run_with_retry(
     status_of: Callable[[T], int],
     is_retriable_status: Callable[[int], bool],
     retriable_exceptions: tuple = (OSError,),
-    sleep: Callable[[float], None] = time.sleep,
+    sleep: Optional[Callable[[float], None]] = None,
     stats: Optional[RetryStats] = None,
     retry_after_of: Optional[Callable[[T], Optional[float]]] = None,
     budget: Optional["RetryBudget"] = None,
@@ -221,7 +221,12 @@ def run_with_retry(
     deposits, each retry must withdraw — an exhausted budget raises
     :class:`HttpRetryError` immediately instead of amplifying an
     outage with the full retry schedule.
+
+    ``sleep`` defaults to ``time.sleep`` looked up at call time, so a
+    test that patches ``time.sleep`` sees every retry sleep.
     """
+    if sleep is None:
+        sleep = time.sleep
     if budget is not None:
         budget.deposit()
     delays = config.delays()

@@ -27,7 +27,6 @@ S11 also replays unacknowledged entries; neither retries failed requests).
 
 from __future__ import annotations
 
-import http.client
 import threading
 import time
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
@@ -38,9 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .auth import AUTHORIZATION, basic_auth_value, preprocess_headers
+from .client import send_with_retry
 from .options import HttpSinkOptions
 from .ratelimit import TokenBucket
 from .request import HttpRequestSpec
+from .retry import HttpRetryError, RetryBudget, RetryConfig
 from .status import SinkErrorCodeChecker
 from .types import HttpSinkRequestEntry
 
@@ -138,11 +139,16 @@ class HttpSinkWriter:
         self.send_errors = 0          # numRecordsSendErrors parity
         self.requests_sent = 0
         self.dead_letters_written = 0  # entries captured under dead-letter.path
+        self._retry = RetryConfig(
+            max_retries=max(0, options.max_retries),
+            strategy="exponential-delay",
+            initial_backoff=options.retry_delay,
+            backoff_multiplier=options.retry_backoff_multiplier,
+            max_backoff=options.retry_max_backoff,
+        )
         # opt-in Finagle-style retry budget (see retry.RetryBudget):
         # shared by all pool workers of this writer task
         if options.retry_budget_ratio is not None:
-            from .retry import RetryBudget
-
             self.retry_budget = RetryBudget(
                 ratio=options.retry_budget_ratio,
                 min_retries_per_second=options.retry_budget_min_per_second,
@@ -303,78 +309,52 @@ class HttpSinkWriter:
         record_count: int,
         payloads: Optional[Tuple[bytes, ...]] = None,
     ) -> None:
-        """Send one framed request. Default (max_retries=0) is reference
-        parity: a failed request is counted, never retried
-        (``HttpSinkWriter.java:114,129-135``). With the OPT-IN
-        ``sink.max-retries`` each transport error or error-classified
-        status is retried with exponential backoff; only exhaustion counts
-        as send errors. At-least-once either way — with an idempotency-
-        keyed endpoint (http_sink_idempotent_replay) retry upgrades
-        transient blips to successes for free. With the opt-in
-        ``sink.dead-letter.path`` every exhausted entry's original
-        (unframed) payload lands as a dead-letter row instead of being
-        dropped (``payloads`` carries them; the wire ``spec.body`` may be
-        framed/gzipped)."""
-        attempts = 1 + max(0, self.options.max_retries)
-        server_hint = None
-        last_status: Optional[int] = None
-        last_error: Optional[str] = None
-        if self.retry_budget is not None:
-            self.retry_budget.deposit()
-        for attempt in range(attempts):
-            if attempt:
-                if (self.retry_budget is not None
-                        and not self.retry_budget.try_withdraw()):
-                    # budget exhausted: fail fast instead of amplifying
-                    # the outage with the remaining retry schedule
-                    last_error = (
-                        f"retry budget exhausted ({last_error})"
-                    )
-                    break
-                delay = (
-                    self.options.retry_delay
-                    * self.options.retry_backoff_multiplier ** (attempt - 1)
-                )
-                if server_hint is not None:
-                    # honor Retry-After like the lookup path: never retry
-                    # faster than policy, never stall past the configured
-                    # ceiling (sink.retry-max-backoff, default 60s — same
-                    # policy knob as the lookup RetryConfig.max_backoff)
-                    delay = max(delay, server_hint)
-                delay = min(delay, self.options.retry_max_backoff)
-                time.sleep(delay)
-            if self.rate_limiter is not None:
-                self.rate_limiter.acquire()
-            try:
-                response = self.transport.send(spec)
-            except (OSError, http.client.HTTPException) as err:
-                # HTTPException covers BadStatusLine and the transport's
-                # corrupt-compressed-body re-raise — same transport-failure
-                # class the lookup path treats as retriable
-                server_hint = None
-                last_status = None
-                last_error = f"{type(err).__name__}: {err}"
-                continue  # transport error: next attempt (or fall out)
-            if self.on_response is not None:
-                self.on_response(spec, response)
-            with self._lock:
-                self.requests_sent += 1
-            if self.checker.is_error(response.status):
-                from .client import _retry_after_hint
+        """Send one framed request through ``client.send_with_retry``.
 
-                server_hint = _retry_after_hint(response)
-                last_status = response.status
-                last_error = f"error-classified status {response.status}"
-                continue
+        An error-classified status or a transport error is retried
+        ``sink.max-retries`` times (default 0: counted, never retried —
+        reference parity, ``HttpSinkWriter.java:114,129-135``), sleeping
+        ``sink.retry-delay`` × ``sink.retry-backoff-multiplier``^(k-1)
+        before retry k, stretched to a Retry-After hint and capped at
+        ``sink.retry-max-backoff``. When the retries or the retry budget
+        run out, the request's records count as send errors and, with
+        ``sink.dead-letter.path`` set, each original (unframed) payload is
+        written as a dead letter (the wire ``spec.body`` may be framed or
+        gzipped). At-least-once either way."""
+        try:
+            send_with_retry(
+                self._send_attempt,
+                spec,
+                config=self._retry,
+                is_retriable_status=self.checker.is_error,
+                limiter=self.rate_limiter,
+                budget=self.retry_budget,
+            )
+        except HttpRetryError as err:
             with self._lock:
-                self.records_sent += record_count
+                self.send_errors += record_count
+            if self.options.dead_letter_path and payloads:
+                cause = err.cause
+                error = (
+                    f"{type(cause).__name__}: {cause}" if cause is not None
+                    else str(err)
+                )
+                self._write_dead_letters(
+                    spec.method, payloads, err.status_code, error
+                )
             return
         with self._lock:
-            self.send_errors += record_count
-        if self.options.dead_letter_path and payloads:
-            self._write_dead_letters(
-                spec.method, payloads, last_status, last_error
-            )
+            self.records_sent += record_count
+
+    def _send_attempt(self, spec: HttpRequestSpec):
+        """One wire attempt: every response, retried or not, fires the
+        R12 callback and counts as a sent request."""
+        response = self.transport.send(spec)
+        if self.on_response is not None:
+            self.on_response(spec, response)
+        with self._lock:
+            self.requests_sent += 1
+        return response
 
     def _write_dead_letters(
         self,

@@ -60,13 +60,9 @@ class HttpGetJson:
             from .client import HttpTransport
 
             self._transport = HttpTransport(timeout=30.0)
-        from .request import HttpRequestSpec
+        from .datasource import _get
 
-        resp = self._transport.send(
-            HttpRequestSpec(method="GET", url=url, headers={}, body=None)
-        )
-        if resp.status != 200:
-            raise IOError(f"http_get_json: {url} returned {resp.status}")
+        resp = _get(self._transport, url, {}, f"http_get_json: {url}")
         decoded = json.loads(resp.body.decode("utf-8"))
         if isinstance(decoded, dict):
             decoded = [decoded]

@@ -131,17 +131,22 @@ class StubHttpServer:
     def stub_json(self, path_prefix: str, payload, status: int = 200) -> None:
         self.stub(path_prefix, lambda _req: json_response(payload, status))
 
-    def stub_sequence(self, path_prefix: str, responses: List[StubResponse]) -> None:
+    def stub_sequence(
+        self, path_prefix: str, responses: List[StubResponse | Responder]
+    ) -> None:
         """Scenario state: each call advances through ``responses``; the last
-        one repeats (WireMock scenario-state equivalent)."""
+        one repeats (WireMock scenario-state equivalent). An entry may be a
+        responder, called with the request — e.g. ``[StubResponse(503),
+        paged_responder]`` fails the first request, then serves the feed."""
         state = {"i": 0}
         lock = threading.Lock()
 
-        def responder(_req: RecordedRequest) -> StubResponse:
+        def responder(req: RecordedRequest) -> StubResponse:
             with lock:
                 i = min(state["i"], len(responses) - 1)
                 state["i"] += 1
-            return responses[i]
+            response = responses[i]
+            return response(req) if callable(response) else response
 
         self.stub(path_prefix, responder)
 

@@ -75,7 +75,7 @@ def silent_server():
 
     t = threading.Thread(target=_loop, daemon=True)
     t.start()
-    yield srv.getsockname()
+    yield srv.getsockname(), accepted
     stop.set()
     t.join(timeout=2)
     for c in accepted:
@@ -91,13 +91,13 @@ class TestConnectPhaseDeadline:
         with pytest.raises(OSError):
             transport.send(_spec(f"http://{host}:{port}/lookup"))
         elapsed = time.monotonic() - start
-        # one stale-socket resend attempt means up to 2x the connect
-        # deadline; the point is it's nowhere near the 30s request timeout
+        # a timed-out connect is not re-sent; the point is it's nowhere
+        # near the 30s request timeout
         assert elapsed < 5.0, f"connect deadline not honored: {elapsed:.2f}s"
         assert elapsed >= 0.4, "connect failed instantly — blackhole fixture broken"
 
     def test_slow_endpoint_still_gets_full_request_timeout(self, silent_server):
-        host, port = silent_server
+        (host, port), accepted = silent_server
         transport = HttpTransport(timeout=1.0, connect_timeout=0.25)
         start = time.monotonic()
         with pytest.raises(OSError):
@@ -110,6 +110,9 @@ class TestConnectPhaseDeadline:
             f"request timeout truncated to connect deadline: {elapsed:.2f}s"
         )
         assert elapsed < 5.0
+        # a timed-out request is not a stale keep-alive socket: the
+        # transport must not re-send it on a second connection
+        assert len(accepted) == 1
 
     def test_no_connect_timeout_defaults_to_request_timeout(self, blackholed_listener):
         host, port = blackholed_listener

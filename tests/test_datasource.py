@@ -212,7 +212,11 @@ def test_stream_read_polling_source(spark, stub, tmp_path):
         [{"id": 1, "name": "a", "score": 0.5}],
         [{"id": 2, "name": "b", "score": 1.5}],
     ]
-    stub.stub("/feed", _paged_responder(pages))
+    # the first page GET draws a 503: the reader retries it, no row lost
+    # or repeated
+    stub.stub_sequence("/feed", [
+        StubResponse(status=503, body=b"busy"), _paged_responder(pages),
+    ])
 
     out_dir = str(tmp_path / "out")
 
@@ -250,10 +254,14 @@ def test_sql_udtf_lateral_lookup(spark, stub):
     from flink_connector_http_spark.sqlfn import register_http_sql_functions
 
     register_http_sql_functions(spark)
-    stub.stub("/item", lambda req: json_response({
-        "id": int(req.query["id"][0]),
-        "name": f"item-{req.query['id'][0]}",
-    }))
+    # one probe row's GET draws a 503 first and is retried
+    stub.stub_sequence("/item", [
+        StubResponse(status=503, body=b"busy"),
+        lambda req: json_response({
+            "id": int(req.query["id"][0]),
+            "name": f"item-{req.query['id'][0]}",
+        }),
+    ])
     spark.createDataFrame([(1,), (2,), (3,)], "id BIGINT").createOrReplaceTempView(
         "probe_v"
     )
@@ -374,7 +382,11 @@ def test_stream_read_distributed_head_endpoint(spark, stub, tmp_path):
         [{"id": 12, "name": "c", "score": 2.5}],
     ]
     stub.stub("/dfeed", _paged_responder(pages))
-    stub.stub("/dfeed-head", lambda _req: json_response({"pages": len(pages)}))
+    # the first head probe draws a 503 and is retried on the driver
+    stub.stub_sequence("/dfeed-head", [
+        StubResponse(status=503, body=b"busy"),
+        lambda _req: json_response({"pages": len(pages)}),
+    ])
 
     out_dir = str(tmp_path / "out")
 
@@ -514,7 +526,11 @@ def test_read_cursor_chain(spark, stub):
         [{"id": 3, "name": "c", "score": 3.0}],
         [{"id": 4, "name": "d", "score": 4.0}],
     ]
-    stub.stub("/cursor-items", _cursor_responder(pages))
+    # the chain's first GET draws a 503: retried in the task, and every
+    # row still arrives exactly once
+    stub.stub_sequence("/cursor-items", [
+        StubResponse(status=503, body=b"busy"), _cursor_responder(pages),
+    ])
     df = (
         spark.read.format("http").schema(SCHEMA)
         .option("url", stub.url("/cursor-items"))
@@ -522,6 +538,7 @@ def test_read_cursor_chain(spark, stub):
         .load()
     )
     assert sorted(r.id for r in df.collect()) == [1, 2, 3, 4]
+    assert len(stub.recorded("/cursor-items")) == 1 + len(pages)
     # inherently sequential: exactly one partition walks the chain
     assert df.rdd.getNumPartitions() == 1
 
@@ -596,7 +613,10 @@ def test_read_link_header_pagination(spark, stub):
             )
         return resp
 
-    stub.stub("/link-items", respond)
+    # the first GET draws a 503, retried in the task
+    stub.stub_sequence("/link-items", [
+        StubResponse(status=503, body=b"busy"), respond,
+    ])
     df = (
         spark.read.format("http").schema(SCHEMA)
         .option("url", stub.url("/link-items"))
@@ -604,6 +624,7 @@ def test_read_link_header_pagination(spark, stub):
         .load()
     )
     assert sorted(r.id for r in df.collect()) == [1, 2, 3]
+    assert len(stub.recorded("/link-items")) == 1 + len(pages)
     assert df.rdd.getNumPartitions() == 1
 
 
@@ -675,14 +696,18 @@ def test_stream_reader_revalidates_head_page_with_etag(stub):
          "max_pages_per_batch": "5"},
         schema,
     )
+
+    def rows(batches):  # read() yields one Arrow RecordBatch per page
+        return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
     rows1, off1 = reader.read({"page": 0})
-    assert [r[0] for r in rows1] == [1] and off1 == {"page": 1}
+    assert [r[0] for r in rows(rows1)] == [1] and off1 == {"page": 1}
 
     # caught up: page 1 is empty; the feed's head page 0 was consumed.
     # simulate the steady-state poll of page 0 again (e.g. recovery
     # replay): must revalidate, get 304, and serve the cached decode
     rows2, _ = reader.read({"page": 0})
-    assert [r[0] for r in rows2] == [1]
+    assert [r[0] for r in rows(rows2)] == [1]
     reqs = [r for r in stub.recorded("/feed")
             if r.query.get("p", ["0"])[0] == "0"]
     assert len(reqs) >= 2
@@ -693,7 +718,7 @@ def test_stream_reader_revalidates_head_page_with_etag(stub):
     state["rows"] = [{"id": 2, "name": "b", "score": 2.0}]
     state["etag"] = '"v2"'
     rows3, _ = reader.read({"page": 0})
-    assert [r[0] for r in rows3] == [2]
+    assert [r[0] for r in rows(rows3)] == [2]
 
 
 # ---------------------------------------------------------------------------
@@ -721,7 +746,11 @@ def test_total_count_header_plans_parallel_partitions(spark, stub):
          for j in range(10 if p < 2 else 5)]
         for p in range(3)
     ]
-    stub.stub("/items", _counted_responder(pages, total=25))
+    # the planner's probe draws a 503 first; its retry still plans
+    stub.stub_sequence("/items", [
+        StubResponse(status=503, body=b"busy"),
+        _counted_responder(pages, total=25),
+    ])
     df = (
         spark.read.format("http")
         .schema(SCHEMA)
@@ -733,9 +762,10 @@ def test_total_count_header_plans_parallel_partitions(spark, stub):
     rows = sorted((r.id, r.name) for r in df.collect())
     want = sorted((p["id"], p["name"]) for page in pages for p in page)
     assert rows == want
-    # planner probe of page 0 + the three partition fetches
+    # the planner's 503 and its retried probe of page 0, then the three
+    # partition fetches
     recorded = stub.recorded("/items")
-    assert len(recorded) == 4
+    assert len(recorded) == 5
 
 
 def test_total_count_header_missing_falls_back_to_walk(spark, stub):
