@@ -526,8 +526,10 @@ class HttpPollingClient:
 
     def send(self, key_values: Mapping[str, Any]) -> Tuple:
         """Network phase: build the request and run it with retries. Returns
-        an opaque exchange for :meth:`publish`. I/O-bound — the async path
-        runs this on the pull pool (``AsyncHttpTableLookupFunction.java:94-115``)."""
+        an opaque exchange for :meth:`publish`. The async lookup runs both
+        phases of a key on the same pool thread; the reference instead
+        hands the decode to a second, publish, pool
+        (``AsyncHttpTableLookupFunction.java:94-115``)."""
         return self._exchange(self.build_request(key_values))
 
     def _send_wire(self, spec: HttpRequestSpec) -> HttpResponse:
@@ -647,8 +649,21 @@ class HttpPollingClient:
                 breaker.record_failure()
         return (spec, response, None)
 
-    def publish(self, exchange: Tuple) -> HttpLookupResult:
-        """Classify + decode phase (CPU-bound); fires the R12 callback."""
+    def _classify(
+        self, exchange: Tuple, decode: Callable[[bytes], List], abandoned=None,
+    ) -> Optional[HttpLookupResult]:
+        """Classify + decode one exchange (CPU-bound); fires the R12
+        callback. A failed exchange, an error status or an undecodable
+        body goes through ``_on_failure``; an ignored status keeps no
+        rows; otherwise ``rows`` is ``decode(body)``.
+
+        ``abandoned`` (a ``threading.Event``) marks an exchange whose
+        caller already reported it as timed out and discarded its result:
+        then this fires NO observer and NO failure accounting and returns
+        None. It is re-checked right before each side effect, so a
+        straggler that raced past the caller's own check is caught here."""
+        if abandoned is not None and abandoned.is_set():
+            return None
         spec, response, failure = exchange
         if failure is not None:
             message, status_code = failure
@@ -656,6 +671,8 @@ class HttpPollingClient:
                 HttpCompletionState.EXCEPTION, message, status_code=status_code
             )
         if self.on_response is not None:
+            if abandoned is not None and abandoned.is_set():
+                return None
             self.on_response(spec, response)
         headers = response.header_map()
         if response.status in self.ignored_codes:
@@ -675,7 +692,7 @@ class HttpPollingClient:
                 headers=headers,
             )
         try:
-            rows = self._decode(response.body)
+            rows = decode(response.body)
         except (ValueError, UnicodeDecodeError) as err:
             return self._on_failure(
                 HttpCompletionState.UNABLE_TO_DESERIALIZE_RESPONSE,
@@ -690,6 +707,10 @@ class HttpPollingClient:
             completion_state=HttpCompletionState.SUCCESS,
         )
 
+    def publish(self, exchange: Tuple) -> HttpLookupResult:
+        """Classify + decode phase of a per-key exchange."""
+        return self._classify(exchange, self._decode)
+
     def pull(self, key_values: Mapping[str, Any]) -> HttpLookupResult:
         """One lookup: returns rows + metadata, or raises when the policy
         says fail (continue-on-error off — reference
@@ -701,13 +722,16 @@ class HttpPollingClient:
         key_values: Mapping[str, Any],
         etag: str,
         cached_result: "HttpLookupResult",
-    ) -> "HttpLookupResult":
+        abandoned=None,
+    ) -> Optional["HttpLookupResult"]:
         """Conditional lookup (beyond-reference): the same request with
         ``If-None-Match: <etag>``. A 304 revalidates ``cached_result``
         without re-downloading the body (the caller refreshes its cache
         TTL); any other status flows through the normal classify/decode
         path and replaces the entry. 304 counts as success for the
-        circuit breaker — the endpoint answered exactly as asked."""
+        circuit breaker — the endpoint answered exactly as asked.
+        ``abandoned`` is as in :meth:`_classify`: once set, no observer
+        fires and the result is None."""
         base = self.build_request(key_values)
         headers = dict(base.headers)
         headers["If-None-Match"] = etag
@@ -715,12 +739,14 @@ class HttpPollingClient:
             method=base.method, url=base.url, headers=headers, body=base.body
         )
         exchange = self._exchange(spec, also_success=(304,))
+        if abandoned is not None and abandoned.is_set():
+            return None  # the caller already served the stale entry
         sent_spec, response, failure = exchange
         if failure is None and response is not None and response.status == 304:
             if self.on_response is not None:
                 self.on_response(sent_spec, response)
             return cached_result
-        return self.publish(exchange)
+        return self._classify(exchange, self._decode, abandoned)
 
     # -- multi-key batch lookup (beyond-reference scale path) ------------------
 
@@ -752,7 +778,7 @@ class HttpPollingClient:
             # a {{placeholder}} URL template has no batch-level value —
             # multi-key batching sends keys in the body, so templated URLs
             # are incompatible with it; surface a failure result instead
-            # of crashing the task out of pull_multi
+            # of crashing the task
             return (None, None, (
                 f"batch lookup cannot resolve URL template {err}: multi-key "
                 "batching (http.source.lookup.request.batch.size) is "
@@ -783,62 +809,21 @@ class HttpPollingClient:
         ``"42"`` for an int key 42 still enriches — the per-key path gets
         this for free from schema decoding; the batch match must apply the
         same types or silently return empty results for every key."""
-        spec, response, failure = exchange
-        n = len(batch_key_values)
-        # `abandoned` (a threading.Event) marks a chunk whose caller
-        # already reported it as timed out and discarded this result: a
-        # straggler thread that raced past the caller-side check must
-        # fire NO observers and NO failure accounting. Re-checked here —
-        # immediately before the first side effect — so the double-fire
-        # window shrinks from "whole classify+decode phase" to the
-        # instants between these checks and the calls they guard (an
-        # unavoidable residue short of a lock around every observer).
-        if abandoned is not None and abandoned.is_set():
-            return []
-        if failure is not None:
-            message, status_code = failure
-            base = self._on_failure(
-                HttpCompletionState.EXCEPTION, message, status_code=status_code
-            )
-            return [base] * n
-        if self.on_response is not None:
-            if abandoned is not None and abandoned.is_set():
-                return []
-            self.on_response(spec, response)
-        headers = response.header_map()
-        if response.status in self.ignored_codes:
-            base = HttpLookupResult(
-                rows=(),
-                status_code=response.status,
-                headers=headers,
-                completion_state=HttpCompletionState.IGNORE_STATUS_CODE,
-            )
-            return [base] * n
-        if not self.checker.is_successful(response.status):
-            base = self._on_failure(
-                HttpCompletionState.HTTP_ERROR_STATUS,
-                f"HTTP error status {response.status}",
-                status_code=response.status,
-                headers=headers,
-            )
-            return [base] * n
-        try:
-            payload = (
-                self._decoder(response.body) if response.body.strip() else []
-            )
+        def decode_array(body: bytes) -> List:
+            payload = self._decoder(body) if body.strip() else []
             if not isinstance(payload, list):
                 raise ValueError(
                     "batch lookup expects an array response "
                     "(one result object per matched key)"
                 )
-        except (ValueError, UnicodeDecodeError) as err:
-            base = self._on_failure(
-                HttpCompletionState.UNABLE_TO_DESERIALIZE_RESPONSE,
-                f"cannot deserialize response: {err}",
-                status_code=response.status,
-                headers=headers,
-            )
-            return [base] * n
+            return payload
+
+        batch = self._classify(exchange, decode_array, abandoned)
+        if batch is None:
+            return []
+        if batch.completion_state != HttpCompletionState.SUCCESS:
+            return [batch] * len(batch_key_values)
+
         def canon(values) -> Tuple:
             if key_coercers is None:
                 return tuple(values)
@@ -851,7 +836,7 @@ class HttpPollingClient:
             return tuple(out)
 
         grouped: Dict[Tuple, List[Mapping[str, Any]]] = {}
-        for row in payload:
+        for row in batch.rows:
             if row is None:
                 continue
             grouped.setdefault(
@@ -862,25 +847,12 @@ class HttpPollingClient:
                 rows=tuple(
                     grouped.get(canon(kv.get(k) for k in key_names), ())
                 ),
-                status_code=response.status,
-                headers=headers,
+                status_code=batch.status_code,
+                headers=batch.headers,
                 completion_state=HttpCompletionState.SUCCESS,
             )
             for kv in batch_key_values
         ]
-
-    def pull_multi(
-        self,
-        batch_key_values: List[Mapping[str, Any]],
-        key_names: List[str],
-        key_coercers: Optional[List] = None,
-    ) -> List[HttpLookupResult]:
-        """One batch lookup: N distinct keys -> one HTTP request -> one
-        result per key, order-aligned with the input."""
-        return self.publish_multi(
-            self.send_multi(batch_key_values), batch_key_values, key_names,
-            key_coercers,
-        )
 
     def _on_failure(
         self,

@@ -127,13 +127,18 @@ def _with_params(url: str, params: Dict[str, Any]) -> str:
     return f"{url}{sep}{urlencode(params)}"
 
 
+class _StatusMiss(IOError):
+    """A GET whose final status is not one the caller accepts."""
+
+
 def _get(transport, url: str, headers: Dict[str, str], what: str,
          limiter=None, ok=(200,)):
     """One GET under the default retry policy (``RetryConfig()``: three
     retries 1 s apart on a 500/503/504 or a transport error, Retry-After
     honoured), so a transient error costs one retried request instead of
-    a failed Spark task. A final status outside ``ok`` raises ``IOError``
-    naming ``what``; an exhausted transport error re-raises its cause."""
+    a failed Spark task. A final status outside ``ok`` raises
+    ``_StatusMiss`` (an ``IOError``) naming ``what``; an exhausted
+    transport error re-raises its cause."""
     from .client import send_with_retry
     from .request import HttpRequestSpec
     from .retry import HttpRetryError, RetryConfig
@@ -155,7 +160,7 @@ def _get(transport, url: str, headers: Dict[str, str], what: str,
     else:
         status = resp.status
     if status not in ok:
-        raise IOError(f"{what} returned status {status}")
+        raise _StatusMiss(f"{what} returned status {status}")
     return resp
 
 
@@ -358,15 +363,20 @@ class HttpBatchReader(DataSourceReader):
         total-count header, and derive the page count from the first
         page's record count. Returns None (→ sequential probing walk) on
         any miss — absent/unparsable header, non-200, or an empty first
-        page. Costs one duplicate fetch of page 0 (the planner's copy is
+        page. A transport error that outlasts the retries fails the read
+        here: the walk's page 0 would only spend the same schedule again.
+        Costs one duplicate fetch of page 0 (the planner's copy is
         discarded; partition 0 re-reads it), which buys a fan-out of the
         remaining N-1 pages across the cluster."""
+        params = {self.page_param: 0, **self.pushed_params}
         try:
-            params = {self.page_param: 0, **self.pushed_params}
             resp = _get(
                 _transport(self.options), _with_params(self.url, params),
                 _auth_headers_factory(self.options)(), "HTTP read: planning probe",
             )
+        except _StatusMiss:
+            return None
+        try:
             total = None
             want = self.total_count_header.lower()
             for name, value in resp.headers:
@@ -384,7 +394,7 @@ class HttpBatchReader(DataSourceReader):
             if page_size <= 0:
                 return None
             return -(-total // page_size)
-        except Exception:  # noqa: BLE001 — planning is best-effort
+        except Exception:  # noqa: BLE001 — a header or body miss: walk instead
             return None
 
     def _fetch_page(

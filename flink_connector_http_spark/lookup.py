@@ -362,6 +362,52 @@ _METADATA = {
 }
 
 
+def _fan_out(opts: HttpLookupOptions, items: Sequence, task, on_timeout) -> List:
+    """Run ``task(item, abandoned)`` for every item; results in item order.
+
+    Under ``use_async`` with two or more items the tasks run on
+    ``min(pull_pool_size, async_buffer_capacity, len(items))`` threads (the
+    reference's async pull pool, ``AsyncHttpTableLookupFunction.java:40-42``;
+    the buffer capacity caps in-flight exchanges) and ``async_timeout`` is
+    ONE deadline for the whole call, as ``table.exec.async-lookup.timeout``
+    bounds the whole async operation. An item not done by then yields
+    ``on_timeout(item)`` and gets its ``abandoned`` event set: its thread,
+    still in flight, must then fire no observer, since its result is
+    discarded. Otherwise the items run one after another on the calling
+    thread with ``abandoned=None`` (the reference's sync lookup)."""
+    if not opts.use_async or len(items) < 2:
+        return [task(item, None) for item in items]
+    workers = max(1, min(
+        opts.pull_pool_size, opts.async_buffer_capacity, len(items)))
+    deadline = (
+        None if opts.async_timeout is None
+        else time.monotonic() + opts.async_timeout
+    )
+    pool = ThreadPoolExecutor(max_workers=workers)
+    try:
+        futs = [
+            (item, ev, pool.submit(task, item, ev))
+            for item in items
+            for ev in (threading.Event(),)
+        ]
+        results = []
+        for item, ev, fut in futs:
+            try:
+                results.append(fut.result(
+                    None if deadline is None
+                    else max(0.0, deadline - time.monotonic())
+                ))
+            except FuturesTimeoutError:
+                ev.set()
+                fut.cancel()
+                results.append(on_timeout(item))
+        return results
+    finally:
+        # every result is materialized: don't block on a hung exchange
+        # (its socket still dies at request_timeout)
+        pool.shutdown(wait=False, cancel_futures=True)
+
+
 def _enrich_pdf(
     cfg: "_EnrichConfig",
     client: HttpPollingClient,
@@ -381,7 +427,7 @@ def _enrich_pdf(
     (column order = ``cfg.out_col_names``), or ``None`` for an empty
     batch."""
     pairs = list(cfg.pairs)
-    pool_size = max(1, cfg.table.options.pull_pool_size)
+    opts = cfg.table.options
     n = len(pdf)
     if n == 0:
         return None
@@ -406,7 +452,7 @@ def _enrich_pdf(
     to_fetch: List[Tuple] = []
     # (key, etag, stale result) triples for conditional refresh
     to_revalidate: List[Tuple[Tuple, str, HttpLookupResult]] = []
-    batch_size = cfg.table.options.lookup_batch_size
+    batch_size = opts.lookup_batch_size
     revalidating = (
         cache is not None and cache.config.revalidate
         and not batch_size  # conditional GET is a per-key exchange
@@ -443,65 +489,31 @@ def _enrich_pdf(
     def key_values_of(kt: Tuple) -> Dict[str, Any]:
         return {_leaf_name(lk): v for (_pc, lk), v in zip(pairs, kt)}
 
+    timed_out = (None, None, (
+        f"async lookup timed out after {opts.async_timeout}s", None,
+    ))
+
     # --- conditional refresh of expired entries (If-None-Match) -------
-    if to_revalidate:
-        if cfg.table.options.use_async and len(to_revalidate) > 1:
-            # pipeline conditional GETs on a pull pool exactly like
-            # the plain-fetch async path — a partition with many
-            # expired ETag'd keys must not serialize round-trips
-            # that a cold fetch would run concurrently. A lapsed
-            # whole-batch deadline degrades to the stale cached
-            # value (the entry stays expired, so the next batch
-            # retries revalidation) instead of stalling the task.
-            opts = cfg.table.options
-            reval_workers = max(
-                1, min(pool_size, len(to_revalidate))
-            )
-            reval_deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
-            reval_pool = ThreadPoolExecutor(max_workers=reval_workers)
-            try:
-                reval_futs = [
-                    (kt, prev, reval_pool.submit(
-                        client.pull_conditional,
-                        key_values_of(kt), etag, prev))
-                    for kt, etag, prev in to_revalidate
-                ]
-                revalidated = []
-                for kt, prev, fut in reval_futs:
-                    try:
-                        result = (
-                            fut.result() if reval_deadline is None
-                            else fut.result(timeout=max(
-                                0.0,
-                                reval_deadline - time.monotonic()))
-                        )
-                    except FuturesTimeoutError:
-                        fut.cancel()
-                        # serve stale WITHOUT refreshing the TTL —
-                        # the entry stays expired so the next batch
-                        # retries the conditional GET
-                        revalidated.append((kt, prev, False))
-                        continue
-                    revalidated.append((kt, result, True))
-            finally:
-                reval_pool.shutdown(wait=False, cancel_futures=True)
-        else:
-            revalidated = [
-                (kt, client.pull_conditional(
-                    key_values_of(kt), etag, prev), True)
-                for kt, etag, prev in to_revalidate
-            ]
-        for kt, result, fresh in revalidated:
-            # 304 → same body, fresh TTL; a stale fallback is not re-cached
-            _store_result(distinct, cache if fresh else None, kt, result)
+    def revalidate(item, abandoned):
+        kt, etag, prev = item
+        return kt, client.pull_conditional(
+            key_values_of(kt), etag, prev, abandoned=abandoned), True
+
+    def serve_stale(item):
+        # WITHOUT refreshing the TTL: the entry stays expired, so the
+        # next batch retries the conditional GET
+        kt, _etag, prev = item
+        return kt, prev, False
+
+    for kt, result, fresh in _fan_out(
+        opts, to_revalidate, revalidate, serve_stale
+    ):
+        # 304 → same body, fresh TTL; a stale fallback is not re-cached
+        _store_result(distinct, cache if fresh else None, kt, result)
 
     fetched: List[Tuple[Tuple, HttpLookupResult]] = []
     if to_fetch and batch_size:
-        # multi-key batch mode: N distinct keys per request; chunks
-        # fetch concurrently on the pull pool under use_async
+        # multi-key batch mode: N distinct keys per request
         leaf_names = [_leaf_name(lk) for _, lk in pairs]
         # canonicalize response/request key values through the
         # DECLARED schema types before matching (the per-key path
@@ -515,135 +527,40 @@ def _enrich_pdf(
             for i in range(0, len(to_fetch), batch_size)
         ]
 
-        def fetch_chunk(
-            chunk: List[Tuple],
-            abandoned: Optional[threading.Event] = None,
-        ) -> List[Tuple]:
+        def fetch_chunk(chunk, abandoned):
             kvs = [key_values_of(kt) for kt in chunk]
             exchange = client.send_multi(kvs)
             if abandoned is not None and abandoned.is_set():
-                # the caller already reported this chunk as timed
-                # out and discarded our result — skip the publish
-                # phase so the dead thread fires NO on_response
-                # observers and NO failure accounting (re-checked
-                # inside publish_multi right before its first
-                # side effect, closing the race where the caller
-                # abandons between this check and the publish)
-                return []
-            return list(
-                zip(chunk,
-                    client.publish_multi(
-                        exchange, kvs, leaf_names, key_coercers,
-                        abandoned=abandoned))
-            )
+                return []  # timed out: publish nothing, fire no observer
+            return list(zip(chunk, client.publish_multi(
+                exchange, kvs, leaf_names, key_coercers,
+                abandoned=abandoned)))
 
-        if cfg.table.options.use_async and len(chunks) > 1:
-            # async_timeout here is a WHOLE-BATCH deadline (the
-            # reference's table.exec.async-lookup.timeout bounds
-            # the complete async operation the same way): once it
-            # lapses, every not-yet-joined chunk is reported as
-            # timed out — a hung endpoint yields timeout results
-            # instead of stalling the task forever
-            opts = cfg.table.options
-            workers = max(1, min(pool_size, len(chunks)))
-            deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
-            pool = ThreadPoolExecutor(max_workers=workers)
-            try:
-                futs = [
-                    (chunk, ev, pool.submit(fetch_chunk, chunk, ev))
-                    for chunk in chunks
-                    for ev in (threading.Event(),)
-                ]
-                fetched = []
-                for chunk, ev, fut in futs:
-                    try:
-                        part = (
-                            fut.result() if deadline is None
-                            else fut.result(timeout=max(
-                                0.0, deadline - time.monotonic()))
-                        )
-                    except FuturesTimeoutError:
-                        ev.set()  # in-flight thread: publish no more
-                        fut.cancel()
-                        kvs = [key_values_of(kt) for kt in chunk]
-                        part = list(zip(chunk, client.publish_multi(
-                            (None, None, (
-                                f"async batch lookup timed out after "
-                                f"{opts.async_timeout}s", None,
-                            )),
-                            kvs, leaf_names,
-                        )))
-                    fetched.extend(part)
-            finally:
-                # don't block on hung in-flight requests: results
-                # are already materialized at the deadline; the
-                # abandoned sockets still die at request_timeout
-                pool.shutdown(wait=False, cancel_futures=True)
-        else:
-            fetched = [
-                pair for chunk in chunks for pair in fetch_chunk(chunk)
-            ]
+        def chunk_timed_out(chunk):
+            kvs = [key_values_of(kt) for kt in chunk]
+            return list(zip(chunk, client.publish_multi(
+                timed_out, kvs, leaf_names)))
+
+        fetched = [
+            pair
+            for part in _fan_out(opts, chunks, fetch_chunk, chunk_timed_out)
+            for pair in part
+        ]
     elif to_fetch:
         _maybe_advise_batch_lookup(len(to_fetch))
-        if not cfg.table.options.use_async or len(to_fetch) == 1:
-            # sync mode: strictly sequential per-key firing, the
-            # reference's synchronous LookupFunction semantics
-            fetched = [
-                (kt, client.pull(key_values_of(kt))) for kt in to_fetch
-            ]
-        else:
-            # asyncPolling: network phase pipelined on the pull pool,
-            # classify/decode published on the publish pool
-            # (AsyncHttpTableLookupFunction.java:40-42,94-115).
-            # buffer-capacity caps in-flight requests; the timeout is
-            # a per-request deadline from submission
-            # (table.exec.async-lookup.*, T2)
-            opts = cfg.table.options
-            fetch_workers = max(
-                1, min(pool_size, opts.async_buffer_capacity)
-            )
-            deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
 
-            def exchange_of(fut):
-                if deadline is None:
-                    return fut.result()
-                try:
-                    return fut.result(
-                        timeout=max(0.0, deadline - time.monotonic())
-                    )
-                except FuturesTimeoutError:
-                    fut.cancel()
-                    return (None, None, (
-                        f"async lookup timed out after "
-                        f"{opts.async_timeout}s", None,
-                    ))
+        def fetch_key(kt, abandoned):
+            if abandoned is None:
+                return kt, client.pull(key_values_of(kt))
+            exchange = client.send(key_values_of(kt))
+            if abandoned.is_set():
+                return None  # timed out: publish nothing, fire no observer
+            return kt, client.publish(exchange)
 
-            publish_size = max(1, opts.publish_pool_size)
-            pull_pool = ThreadPoolExecutor(max_workers=fetch_workers)
-            publish_pool = ThreadPoolExecutor(max_workers=publish_size)
-            try:
-                send_futs = [
-                    (kt, pull_pool.submit(client.send, key_values_of(kt)))
-                    for kt in to_fetch
-                ]
-                pub_futs = [
-                    (kt, publish_pool.submit(
-                        lambda f=f: client.publish(exchange_of(f))))
-                    for kt, f in send_futs
-                ]
-                fetched = [(kt, pf.result()) for kt, pf in pub_futs]
-            finally:
-                # timeout results are already materialized — don't
-                # let pool teardown block on a hung send future
-                # (abandoned sockets still die at request_timeout)
-                publish_pool.shutdown(wait=False, cancel_futures=True)
-                pull_pool.shutdown(wait=False, cancel_futures=True)
+        fetched = _fan_out(
+            opts, to_fetch, fetch_key,
+            lambda kt: (kt, client.publish(timed_out)),
+        )
 
     for kt, result in fetched:
         _store_result(distinct, cache, kt, result)

@@ -40,7 +40,6 @@ LOOKUP_OPTION_KEYS = {
     # clientBuilder.connectTimeout); distinct from the whole-request timeout
     "connection_timeout": "http.source.lookup.connection.timeout",
     "pull_pool_size": "http.source.lookup.request.thread-pool.size",
-    "publish_pool_size": "http.source.lookup.response.thread-pool.size",
     "use_async": "asyncPolling",
     "async_buffer_capacity": "table.exec.async-lookup.buffer-capacity",
     "async_timeout": "table.exec.async-lookup.timeout",
@@ -215,20 +214,20 @@ class HttpLookupOptions:
     # endpoint in a pool.
     connection_timeout: Optional[float] = None        # seconds
     pull_pool_size: int = 8
-    publish_pool_size: int = 4
     # False → strictly sequential per-key firing (the reference's sync
-    # LookupFunction); True → pipelined fetch on pull_pool_size workers
-    # with decode/publish on publish_pool_size workers (asyncPolling,
+    # LookupFunction); True → one pool of pull_pool_size workers per probe
+    # batch, each fetching and decoding its own exchanges (asyncPolling;
+    # the reference's second, response/publish, pool is not modelled and
+    # http.source.lookup.response.thread-pool.size is ignored —
     # AsyncHttpTableLookupFunction.java:40-42,94-115)
     use_async: bool = False
     # host-engine async knobs (Flink table.exec.async-lookup.*): capacity
-    # caps concurrent in-flight lookups (effective fetch concurrency =
-    # min(pull_pool_size, async_buffer_capacity)); timeout is the deadline
-    # per async request measured from submission — on expiry the lookup
-    # fails (or yields an EXCEPTION-state row under continue_on_error).
-    # On the multi-key batch path the timeout is a WHOLE-BATCH deadline:
-    # all chunks share it, and chunks not joined when it lapses are
-    # reported timed out even if their response lands moments later
+    # caps concurrent in-flight exchanges (pool size =
+    # min(pull_pool_size, async_buffer_capacity)) on the per-key, batch
+    # and revalidation paths alike; timeout is ONE deadline for the whole
+    # probe batch — exchanges not done when it lapses fail (or yield an
+    # EXCEPTION-state row under continue_on_error; a revalidation serves
+    # its stale entry) even if their response lands moments later
     async_buffer_capacity: int = 100                  # Flink default
     async_timeout: Optional[float] = None             # seconds; None = no deadline
     result_type: str = "single-value"                 # or "array"
@@ -585,8 +584,6 @@ def lookup_options_from_map(options: Mapping[str, str]) -> HttpLookupOptions:
             options[k["connection_timeout"]], k["connection_timeout"])
     if k["pull_pool_size"] in options:
         kwargs["pull_pool_size"] = int(options[k["pull_pool_size"]])
-    if k["publish_pool_size"] in options:
-        kwargs["publish_pool_size"] = int(options[k["publish_pool_size"]])
     if k["use_async"] in options:
         kwargs["use_async"] = _as_bool(options[k["use_async"]])
     if k["async_buffer_capacity"] in options:

@@ -125,6 +125,30 @@ class TestConnectPhaseDeadline:
         assert time.monotonic() - start < 5.0
 
 
+def test_planning_probe_transport_error_fails_the_read(silent_server):
+    """The total-count planning probe against a silent endpoint fails the
+    read with the transport error after its own retry schedule (4 GETs,
+    4T + 3 s), instead of planning the walk, whose page 0 would spend the
+    same schedule again."""
+    from pyspark.sql import types as T
+
+    from flink_connector_http_spark.datasource import HttpBatchReader
+
+    (host, port), accepted = silent_server
+    timeout = 0.5
+    reader = HttpBatchReader(
+        {"url": f"http://{host}:{port}/items", "timeout": str(timeout),
+         "total_count_header": "X-Total-Count"},
+        T.StructType([T.StructField("id", T.LongType())]),
+    )
+    start = time.monotonic()
+    with pytest.raises(OSError):
+        reader.partitions()
+    elapsed = time.monotonic() - start
+    assert len(accepted) == 4
+    assert elapsed < 2 * (4 * timeout + 3)
+
+
 class TestConnectionTimeoutOption:
     def test_option_key_parses_to_seconds(self):
         opts = lookup_options_from_map(

@@ -277,25 +277,32 @@ class TestAsyncKnobs:
             _time.sleep(0.05)
             with lock:
                 active["now"] -= 1
-            key = req.query.get("n_nationkey", ["0"])[0]
-            return StubResponse(
-                status=200,
-                body=json.dumps({"n_nationkey": int(key), "n_name": "Y"}).encode(),
-            )
+            if req.method == "POST":  # a multi-key chunk
+                rows = [{"n_nationkey": k["n_nationkey"], "n_name": "Y"}
+                        for k in req.json()]
+            else:
+                key = req.query.get("n_nationkey", ["0"])[0]
+                rows = {"n_nationkey": int(key), "n_name": "Y"}
+            return StubResponse(status=200, body=json.dumps(rows).encode())
 
         stub_server.stub("/bounded", responder)
         probe = spark.createDataFrame([Row(key=i) for i in range(12)]).coalesce(1)
-        table = HttpLookupTable(
-            url=stub_server.url("/bounded"),
-            schema=NATION_SCHEMA,
-            options=HttpLookupOptions(
-                method="GET", use_async=True,
-                pull_pool_size=8, async_buffer_capacity=2,
-            ),
-        )
-        out = http_lookup_join(probe, table, on={"key": "n_nationkey"}).collect()
-        assert len(out) == 12
-        assert active["max"] <= 2  # capacity caps in-flight requests
+        # per-key GETs, then one-key POST chunks: the capacity bounds both
+        for batch_size in (None, 1):
+            active["max"] = 0
+            table = HttpLookupTable(
+                url=stub_server.url("/bounded"),
+                schema=NATION_SCHEMA,
+                options=HttpLookupOptions(
+                    method="GET", use_async=True,
+                    pull_pool_size=8, async_buffer_capacity=2,
+                    lookup_batch_size=batch_size,
+                ),
+            )
+            out = http_lookup_join(probe, table, on={"key": "n_nationkey"}).collect()
+            assert len(out) == 12
+            # capacity caps in-flight requests
+            assert active["max"] <= 2, f"lookup_batch_size={batch_size}"
 
     def test_lookup_metrics_accumulators(self, spark, stub_server):
         from flink_connector_http_spark.lookup import http_lookup_join as hlj

@@ -627,48 +627,54 @@ def test_batch_lookup_async_timeout_yields_timeout_results(spark, stub_server):
 def test_batch_lookup_abandoned_chunk_fires_no_observers(
     spark, stub_server, tmp_path
 ):
-    """Round-4 ADVICE: when a chunk misses the whole-batch async deadline
-    its result is discarded — the still-running fetch thread must then
-    skip the publish phase entirely, firing NO on_response callback for
-    the orphaned exchange. One fast chunk + one hung chunk => exactly one
-    callback invocation, even after the hung response finally lands."""
+    """Round-4 ADVICE: when an exchange misses the whole-batch async
+    deadline its result is discarded — the still-running fetch thread must
+    then skip the publish phase entirely, firing NO on_response callback
+    for the orphaned exchange. One fast + one hung exchange => exactly one
+    callback invocation, even after the hung response finally lands; on
+    the multi-key chunk path and on the per-key GET path alike."""
     import time as _time
 
-    marker = tmp_path / "on_response_calls.txt"
-
     def responder(request):
-        keys = request.json()
-        if keys[0]["id"] == 2:  # the hung chunk
+        if request.method == "POST":  # a multi-key chunk
+            ids = [k["id"] for k in request.json()]
+        else:
+            ids = [int(request.query["id"][0])]
+        if ids[0] == 2:  # the hung exchange
             _time.sleep(4.0)
-        rows = [CUSTOMERS[k["id"]] for k in keys if k["id"] in CUSTOMERS]
-        return json_response(rows)
+        rows = [CUSTOMERS[i] for i in ids if i in CUSTOMERS]
+        return json_response(rows if request.method == "POST" else rows[0])
 
     stub_server.stub("/customers-batch-orphan", responder)
-    mpath = str(marker)
-    table = HttpLookupTable(
-        url=stub_server.url("/customers-batch-orphan"),
-        schema=CUSTOMER_SCHEMA,
-        options=HttpLookupOptions(
-            lookup_batch_size=1,     # 2 distinct keys -> 2 chunks
-            use_async=True,
-            # the fast chunk answers in ms, the hung one in 4 s: a 2 s
-            # whole-batch deadline splits them with 2 s of load margin
-            # EACH way (1.0/2.0 flaked when the machine was busy)
-            async_timeout=2.0,
-            continue_on_error=True,
-            request_callback=lambda s, r: open(mpath, "a").write("x"),
-        ),
-    )
-    out = http_lookup_join(
-        orders_df(spark, ids=(1, 2)).coalesce(1), table,
-        on={"cust_id": "id"},
-        metadata_columns=["http-completion-state"],
-    )
-    states = sorted(r["http-completion-state"] for r in out.collect())
-    assert states == ["EXCEPTION", "SUCCESS"]
-    # let the abandoned thread's response land and (not) publish
+    markers = {}
+    for path, batch_size in (("chunk", 1), ("per-key", None)):
+        mpath = str(tmp_path / f"on_response_calls_{path}.txt")
+        markers[path] = mpath
+        table = HttpLookupTable(
+            url=stub_server.url("/customers-batch-orphan"),
+            schema=CUSTOMER_SCHEMA,
+            options=HttpLookupOptions(
+                lookup_batch_size=batch_size,  # 1: 2 distinct keys -> 2 chunks
+                use_async=True,
+                # the fast exchange answers in ms, the hung one in 4 s: a
+                # 2 s whole-batch deadline splits them with 2 s of load
+                # margin EACH way (1.0/2.0 flaked when the machine was busy)
+                async_timeout=2.0,
+                continue_on_error=True,
+                request_callback=lambda s, r, m=mpath: open(m, "a").write("x"),
+            ),
+        )
+        out = http_lookup_join(
+            orders_df(spark, ids=(1, 2)).coalesce(1), table,
+            on={"cust_id": "id"},
+            metadata_columns=["http-completion-state"],
+        )
+        states = sorted(r["http-completion-state"] for r in out.collect())
+        assert states == ["EXCEPTION", "SUCCESS"], path
+    # let the abandoned threads' responses land and (not) publish
     _time.sleep(4.5)
-    assert marker.read_text() == "x"
+    for path, mpath in markers.items():
+        assert open(mpath).read() == "x", path
 
 
 def test_circuit_breaker_short_circuits_after_threshold(spark, stub_server):
@@ -927,6 +933,75 @@ def test_cache_revalidation_pipelines_under_async(spark, stub_server):
         "alice", "alice", "bob", "bob"]
     assert calls["full"] == 2
     assert calls["cond"] == 2 and calls["broken"] == 0
+
+
+def test_cache_revalidation_timeout_serves_stale(stub_server):
+    """Under use_async a conditional GET that misses the whole-batch
+    deadline serves the stale cached rows without refreshing the entry,
+    so the next batch revalidates again; the abandoned revalidation fires
+    no on_response observer when its answer finally lands."""
+    import time as _time
+
+    import pandas as pd
+
+    from flink_connector_http_spark.cache import LruTtlCache
+    from flink_connector_http_spark.client import HttpPollingClient
+    from flink_connector_http_spark.lookup import _EnrichConfig, _enrich_pdf
+
+    hang = 2.0
+    calls = {"full": 0, "cond": 0}
+
+    def responder(request):
+        key = int(request.query["id"][0])
+        if request.headers.get("If-None-Match") == f'"v{key}"':
+            calls["cond"] += 1
+            _time.sleep(hang)  # hung past the 0.5 s deadline
+            return StubResponse(status=304, headers={"ETag": f'"v{key}"'})
+        calls["full"] += 1
+        resp = json_response(CUSTOMERS[key])
+        resp.headers["ETag"] = f'"v{key}"'
+        return resp
+
+    stub_server.stub("/customers-reval-hung", responder)
+    observed = []
+    table = HttpLookupTable(
+        url=stub_server.url("/customers-reval-hung"),
+        schema=CUSTOMER_SCHEMA,
+        options=HttpLookupOptions(
+            use_async=True,
+            async_timeout=0.5,
+            request_callback=lambda s, r: observed.append(r.status),
+            cache=LookupCacheConfig(
+                max_rows=100, expire_after_write=0.0, revalidate=True,
+            ),
+        ),
+    )
+    cfg = _EnrichConfig(
+        table=table,
+        pairs=(("cust_id", "id"),),
+        probe_col_names=("cust_id",),
+        output_lookup_fields=tuple(CUSTOMER_SCHEMA.fields),
+        out_col_names=("cust_id", "id", "name", "balance"),
+        lookup_prefix="",
+        key_lookup_names=("id",),
+        meta_names=(),
+        emit_on_empty=False,
+    )
+    client = HttpPollingClient(url=table.url, options=table.options)
+    cache = LruTtlCache(table.options.cache)
+    pdf = pd.DataFrame({"cust_id": [1, 2, 1]})
+
+    out = _enrich_pdf(cfg, client, cache, pdf)  # cold: two full GETs
+    assert list(out["name"]) == ["alice", "bob", "alice"]
+    for _ in range(2):  # both keys stale with an ETag: revalidate, time out
+        start = _time.monotonic()
+        out = _enrich_pdf(cfg, client, cache, pdf)
+        assert _time.monotonic() - start < hang
+        assert list(out["name"]) == ["alice", "bob", "alice"]
+        assert cache.probe((1,))[1] == "stale"
+    _time.sleep(hang + 0.5)  # let the abandoned revalidations land
+    assert calls == {"full": 2, "cond": 4}
+    assert observed == [200, 200]  # the cold fetches only
 
 
 def test_hedged_lookup_fires_and_wins_on_slow_primary(spark, stub_server):

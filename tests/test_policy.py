@@ -518,7 +518,6 @@ class TestOptionKeyCompleteness:
             "method": "PUT",
             "request_timeout": 12.5,
             "pull_pool_size": 3,
-            "publish_pool_size": 4,
             "use_async": True,
             "async_buffer_capacity": 77,
             "async_timeout": 9.5,
