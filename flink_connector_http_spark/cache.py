@@ -7,7 +7,8 @@ Parity target: Flink ``DefaultLookupCache`` as configured by the reference
 
 Spark placement: one cache per (executor python worker, config) —
 module-level registry keyed by a config fingerprint, because Spark reuses
-python workers across tasks. Thread-safe for the async lookup pool.
+python workers across tasks. The registry keeps the ``MAX_TABLES`` most
+recently used caches. Thread-safe.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import threading
 import time
 from collections import OrderedDict
 from dataclasses import dataclass
-from typing import Any, Callable, Dict, Hashable, Optional, Tuple
+from typing import Any, Callable, Hashable, Optional, Tuple
 
 __all__ = ["LookupCacheConfig", "LruTtlCache", "shared_cache"]
 
@@ -129,7 +130,14 @@ class LruTtlCache:
             return len(self._data)
 
 
-_REGISTRY: Dict[Tuple, LruTtlCache] = {}
+#: lookup tables a python worker keeps a client and a cache for. Every
+#: distinct table fingerprint (URL, schema, options) gets its own, about
+#: 3.5 MB for a 2k-key table; without a bound a long-lived worker keeps
+#: every table it ever saw. Four covers a plan's chained lookups.
+MAX_TABLES = 4
+
+#: least recently used first
+_REGISTRY: "OrderedDict[Tuple, LruTtlCache]" = OrderedDict()
 _REGISTRY_LOCK = threading.Lock()
 
 
@@ -144,4 +152,8 @@ def shared_cache(namespace: Hashable, config: LookupCacheConfig) -> LruTtlCache:
         cache = _REGISTRY.get(key)
         if cache is None:
             cache = _REGISTRY[key] = LruTtlCache(config)
+            while len(_REGISTRY) > MAX_TABLES:
+                _REGISTRY.popitem(last=False)
+        else:
+            _REGISTRY.move_to_end(key)
         return cache

@@ -11,8 +11,8 @@ Re-expresses the reference's lookup client state machine (SURVEY §2.1 S4):
 - OIDC/Basic header rewrite at request time (never at plan time):
   ``JavaNetHttpPollingClient.java:211-249``, ``RequestFactoryBase.java:71-74``
 
-Transport is Python stdlib ``urllib.request`` (HTTP/1.1) with an opener
-carrying the TLS context and optional authenticated proxy
+Every exchange runs on ``wire.HttpTransport``: non-blocking keep-alive
+sockets with the TLS context and optional authenticated proxy
 (``utils/JavaNetHttpClientFactory.java:74-94``).
 """
 
@@ -20,16 +20,7 @@ from __future__ import annotations
 
 import http.client
 import logging
-import socket
-import threading
-import urllib.error
-import urllib.parse
-import urllib.request
-import weakref
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
-from concurrent.futures import TimeoutError as _FuturesTimeout
-from concurrent.futures import wait as _futures_wait
-from typing import Any, Callable, Dict, List, Mapping, Optional, Tuple
+from typing import Any, Callable, Dict, List, Mapping, Optional, Sequence, Tuple
 
 from .auth import (
     AUTHORIZATION,
@@ -51,15 +42,20 @@ from .retry import (
     RetryConfig,
     RetryStats,
     parse_retry_after,
-    run_with_retry,
+    retry_steps,
+    run_steps,
 )
 from .status import HttpResponseChecker, parse_http_codes
-from .tls import build_ssl_context
 from .types import HttpCompletionState, HttpLookupResult
+from .wire import HttpResponse, HttpTransport, _decompress_response  # noqa: F401
 
 __all__ = ["HttpResponse", "HttpTransport", "HttpPollingClient", "send_with_retry"]
 
 logger = logging.getLogger(__name__)
+
+#: what a wire attempt raises that the retry policy retries: a socket error
+#: or timeout, or bad framing (BadStatusLine, a truncated or corrupt body)
+_TRANSPORT_ERRORS = (OSError, http.client.HTTPException)
 
 
 def _retry_after_hint(response: "HttpResponse"):
@@ -73,6 +69,33 @@ def _retry_after_hint(response: "HttpResponse"):
     return None
 
 
+def _status(response: "HttpResponse") -> int:
+    return response.status
+
+
+def http_retry_steps(
+    spec: HttpRequestSpec,
+    *,
+    config: RetryConfig,
+    is_retriable_status: Callable[[int], bool],
+    stats: Optional[RetryStats] = None,
+    budget: Optional[RetryBudget] = None,
+):
+    """``retry.retry_steps`` for one HTTP request: the transport's errors
+    and a retriable status are retried, after ``max(policy delay,
+    Retry-After)`` capped at the backoff ceiling."""
+    return retry_steps(
+        spec,
+        config=config,
+        status_of=_status,
+        is_retriable_status=is_retriable_status,
+        retriable_exceptions=_TRANSPORT_ERRORS,
+        stats=stats,
+        retry_after_of=_retry_after_hint,
+        budget=budget,
+    )
+
+
 def send_with_retry(
     send: Callable[[HttpRequestSpec], HttpResponse],
     spec: HttpRequestSpec,
@@ -83,9 +106,10 @@ def send_with_retry(
     stats: Optional[RetryStats] = None,
     budget: Optional[RetryBudget] = None,
 ) -> HttpResponse:
-    """Send ``spec`` through ``send`` with retries: the one retry path of
-    the lookup client, the sink, the ``http`` source and ``http_get_json``
-    (reference ``HttpClientWithRetry.java:44-92``).
+    """Send ``spec`` through ``send`` under :func:`http_retry_steps`, blocking:
+    the retry path of the sink, the ``http`` source and ``http_get_json``
+    (reference ``HttpClientWithRetry.java:44-92``). The lookup client runs
+    the same steps on its transport's loop (:meth:`HttpPollingClient.run`).
 
     Each wire attempt, retries included, takes one ``limiter`` permit.
     ``OSError`` and ``http.client.HTTPException`` (BadStatusLine, a corrupt
@@ -94,20 +118,15 @@ def send_with_retry(
     backoff ceiling. Returns the first other response; raises
     :class:`HttpRetryError` when the attempts or the ``budget`` run out."""
 
-    def attempt() -> HttpResponse:
+    def attempt(spec: HttpRequestSpec) -> HttpResponse:
         if limiter is not None:
             limiter.acquire()
         return send(spec)
 
-    return run_with_retry(
+    return run_steps(
+        http_retry_steps(spec, config=config, is_retriable_status=is_retriable_status,
+                         stats=stats, budget=budget),
         attempt,
-        config=config,
-        status_of=lambda r: r.status,
-        is_retriable_status=is_retriable_status,
-        retriable_exceptions=(OSError, http.client.HTTPException),
-        stats=stats,
-        retry_after_of=_retry_after_hint,
-        budget=budget,
     )
 
 
@@ -122,275 +141,12 @@ def _default_request_callback(spec, response) -> None:
         _debug_exchange_logger(spec, response)
 
 
-class HttpResponse:
-    """Minimal response view: status, headers (multi-valued), body bytes."""
-
-    __slots__ = ("status", "headers", "body")
-
-    def __init__(self, status: int, headers: List[Tuple[str, str]], body: bytes):
-        self.status = status
-        self.headers = headers
-        self.body = body
-
-    def header_map(self) -> Dict[str, List[str]]:
-        """Headers as ``MAP<STRING, ARRAY<STRING>>`` for the metadata column
-        (reference ``HttpLookupTableSource.java:345-359``)."""
-        out: Dict[str, List[str]] = {}
-        for name, value in self.headers:
-            out.setdefault(name, []).append(value)
-        return out
-
-
-class _ConnectPhaseTimeoutMixin:
-    """Separate connect-phase deadline (reference
-    ``http.source.lookup.connection.timeout`` →
-    ``HttpLookupConnectorOptions.java:129-133`` →
-    ``JavaNetHttpClientFactory.java:71-72`` / ``HttpClient.connectTimeout``).
-
-    ``http.client`` applies ONE socket timeout to both connect and read.
-    Here the TCP connect (and, for HTTPS, the TLS handshake — the same
-    connection-establishment phase Java 11's ``connectTimeout`` governs)
-    runs under ``connect_timeout``; once established, the socket reverts
-    to the whole-request timeout. This is what lets a pool member with a
-    dead endpoint fail over in ~1s instead of eating the full 30s
-    request deadline."""
-
-    def __init__(self, *args, connect_timeout: Optional[float] = None, **kwargs) -> None:
-        super().__init__(*args, **kwargs)
-        self._connect_timeout = connect_timeout
-
-    def connect(self) -> None:
-        if self._connect_timeout is None:
-            super().connect()
-        else:
-            request_timeout = self.timeout
-            self.timeout = self._connect_timeout
-            try:
-                super().connect()
-            finally:
-                self.timeout = request_timeout
-            self.sock.settimeout(request_timeout)
-        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-
-
-class _NoDelayHTTPConnection(_ConnectPhaseTimeoutMixin, http.client.HTTPConnection):
-    """TCP_NODELAY keep-alive connection — without it the request/response
-    ping-pong hits Nagle + delayed-ACK (~40ms per call), which at thousands
-    of lookups per task dwarfs everything else."""
-
-
-class _NoDelayHTTPSConnection(_ConnectPhaseTimeoutMixin, http.client.HTTPSConnection):
-    pass
-
-
-def _decompress_response(
-    headers: List[Tuple[str, str]], body: bytes
-) -> Tuple[List[Tuple[str, str]], bytes]:
-    """Transparent gzip/deflate decoding: when the server honored our
-    Accept-Encoding, hand every consumer plain bytes and drop the
-    now-inaccurate Content-Encoding/Content-Length headers (the same
-    contract as every mainstream HTTP client). Unknown encodings pass
-    through untouched — classification/decode failures stay upstream
-    policy decisions."""
-    encoding = ""
-    for name, value in headers:
-        if name.lower() == "content-encoding":
-            encoding = value.strip().lower()
-            break
-    if encoding in ("gzip", "x-gzip"):
-        import gzip as _gzip
-
-        try:
-            body = _gzip.decompress(body)
-        except (EOFError, _gzip.BadGzipFile, OSError) as exc:
-            # Truncated/corrupt gzip raises EOFError/BadGzipFile — neither
-            # is an OSError subclass the retry/continue_on_error layers
-            # classify. Surface as a transport failure so the existing
-            # classification (retry, error-counting, continue-on-error)
-            # treats a corrupt compressed body like any other bad response.
-            raise http.client.HTTPException(
-                f"corrupt gzip response body: {exc}"
-            ) from exc
-    elif encoding == "deflate":
-        import zlib as _zlib
-
-        try:
-            body = _zlib.decompress(body)
-        except _zlib.error:  # raw-deflate servers omit the zlib wrapper
-            try:
-                body = _zlib.decompress(body, -_zlib.MAX_WBITS)
-            except _zlib.error as exc:
-                raise http.client.HTTPException(
-                    f"corrupt deflate response body: {exc}"
-                ) from exc
-    else:
-        return headers, body
-    headers = [
-        (n, v) for n, v in headers
-        if n.lower() not in ("content-encoding", "content-length")
-    ]
-    return headers, body
-
-
-class HttpTransport:
-    """One configured transport: TLS + proxy + timeout.
-
-    Fast path keeps one persistent ``http.client`` connection per
-    (scheme, authority) per thread — HTTP keep-alive matters at scale:
-    a lookup join fires thousands of requests per task, and per-request
-    TCP+TLS setup dominates otherwise. Proxied requests fall back to a
-    urllib opener (rare path, correctness over speed).
-
-    Compression: requests advertise ``Accept-Encoding: gzip, deflate``
-    (unless the caller set the header explicitly) and responses are
-    transparently decompressed — at ingest scale the JSON feeds this
-    connector reads compress 5-10x, so the wire cost of a 100 TB-adjacent
-    pipeline drops by the same factor when the endpoint cooperates."""
-
-    def __init__(
-        self,
-        *,
-        timeout: float = 30.0,
-        connect_timeout: Optional[float] = None,
-        server_ca: Optional[str] = None,
-        client_cert: Optional[str] = None,
-        client_key: Optional[str] = None,
-        allow_self_signed: bool = False,
-        proxy_host: Optional[str] = None,
-        proxy_port: Optional[int] = None,
-        proxy_user: Optional[str] = None,
-        proxy_password: Optional[str] = None,
-    ) -> None:
-        self.timeout = timeout
-        # Connect-phase-only deadline (None = connect shares the request
-        # timeout, the reference's no-default behavior). Applies to the
-        # keep-alive fast path; the proxied urllib fallback has a single
-        # opener-level timeout, so there the whole-request deadline still
-        # governs the connect phase (documented rare path).
-        self.connect_timeout = connect_timeout
-        handlers: list = []
-        context = build_ssl_context(
-            server_ca=server_ca,
-            client_cert=client_cert,
-            client_key=client_key,
-            allow_self_signed=allow_self_signed,
-        )
-        self._ssl_context = context
-        self._use_proxy = bool(proxy_host)
-        self._local = threading.local()
-        if context is not None:
-            handlers.append(urllib.request.HTTPSHandler(context=context))
-        if proxy_host:
-            authority = f"{proxy_host}:{proxy_port}" if proxy_port else proxy_host
-            if proxy_user:
-                authority = f"{proxy_user}:{proxy_password or ''}@{authority}"
-            handlers.append(urllib.request.ProxyHandler({
-                "http": f"http://{authority}",
-                "https": f"http://{authority}",
-            }))
-        self._opener = urllib.request.build_opener(*handlers)
-
-    def send(self, spec: HttpRequestSpec) -> HttpResponse:
-        """Issue one request; non-2xx responses return normally (policy
-        classification happens upstream, like the reference's client)."""
-        if not any(n.lower() == "accept-encoding" for n in spec.headers):
-            spec = HttpRequestSpec(
-                method=spec.method,
-                url=spec.url,
-                headers={**dict(spec.headers),
-                         "Accept-Encoding": "gzip, deflate"},
-                body=spec.body,
-            )
-        if self._use_proxy:
-            resp = self._send_urllib(spec)
-        else:
-            resp = self._send_keepalive(spec)
-        headers, body = _decompress_response(resp.headers, resp.body)
-        if body is not resp.body:
-            return HttpResponse(resp.status, headers, body)
-        return resp
-
-    def _send_urllib(self, spec: HttpRequestSpec) -> HttpResponse:
-        req = urllib.request.Request(
-            spec.url,
-            data=spec.body,
-            headers=dict(spec.headers),
-            method=spec.method,
-        )
-        try:
-            with self._opener.open(req, timeout=self.timeout) as resp:
-                return HttpResponse(resp.status, list(resp.headers.items()), resp.read())
-        except urllib.error.HTTPError as err:
-            body = err.read() if hasattr(err, "read") else b""
-            return HttpResponse(err.code, list((err.headers or {}).items()), body)
-
-    def _connection(self, scheme: str, authority: str):
-        conns = getattr(self._local, "conns", None)
-        if conns is None:
-            conns = {}
-            self._local.conns = conns
-        key = (scheme, authority)
-        conn = conns.get(key)
-        if conn is None:
-            if scheme == "https":
-                conn = _NoDelayHTTPSConnection(
-                    authority,
-                    timeout=self.timeout,
-                    connect_timeout=self.connect_timeout,
-                    context=self._ssl_context,
-                )
-            else:
-                conn = _NoDelayHTTPConnection(
-                    authority,
-                    timeout=self.timeout,
-                    connect_timeout=self.connect_timeout,
-                )
-            conns[key] = conn
-        return conn
-
-    _IDEMPOTENT_METHODS = frozenset({"GET", "HEAD", "PUT", "DELETE", "OPTIONS", "TRACE"})
-
-    def _send_keepalive(self, spec: HttpRequestSpec) -> HttpResponse:
-        parsed = urllib.parse.urlsplit(spec.url)
-        target = parsed.path or "/"
-        if parsed.query:
-            target += "?" + parsed.query
-        # one reconnect on a stale kept-alive socket — but only for
-        # idempotent methods: a POST may already have been processed by the
-        # server even though the socket died, so re-sending it here would
-        # risk a duplicate side effect; non-idempotent failures propagate to
-        # the retry policy, where re-sending is the user's explicit choice
-        # (matching reference HttpClientWithRetry.java:44-92, which owns all
-        # IOException retrying).
-        resend_ok = spec.method.upper() in self._IDEMPOTENT_METHODS
-        for attempt in (0, 1):
-            conn = self._connection(parsed.scheme, parsed.netloc)
-            try:
-                conn.request(spec.method, target, body=spec.body, headers=dict(spec.headers))
-                resp = conn.getresponse()
-                body = resp.read()
-                return HttpResponse(resp.status, list(resp.getheaders()), body)
-            except (http.client.HTTPException, ConnectionError, OSError) as err:
-                conn.close()
-                self._local.conns.pop((parsed.scheme, parsed.netloc), None)
-                # a stale socket fails with a reset or RemoteDisconnected,
-                # never a timeout: re-sending a timed-out request would only
-                # double the wait on a silent endpoint
-                if attempt == 1 or not resend_ok or isinstance(err, TimeoutError):
-                    raise
-
-
-def _shutdown_hedge_pool(pool: ThreadPoolExecutor) -> None:
-    """weakref.finalize target: must be a module function holding no
-    client reference, or the finalizer would keep the client alive."""
-    pool.shutdown(wait=False, cancel_futures=True)
-
-
 class HttpPollingClient:
     """Build request → send with retry → classify → decode → metadata.
 
-    One instance per (executor worker, lookup-table config); thread-safe, so
-    the async pool can share it.
+    One instance per (executor worker, lookup-table config). Its step
+    sequences run on the transport's loop, many at once on one thread
+    (:meth:`run`); the blocking :meth:`pull` runs one.
     """
 
     def __init__(
@@ -426,8 +182,8 @@ class HttpPollingClient:
             proxy_user=options.proxy_user,
             proxy_password=options.proxy_password,
         )
-        # per-task request rate cap (SURVEY §7 scale addition; shared by
-        # the pull pool's threads so the cap covers async fan-out too)
+        # per-task request rate cap (SURVEY §7 scale addition; every wire
+        # attempt of the loop takes a permit, so it covers async fan-out)
         self.rate_limiter = (
             TokenBucket(options.rate_limit, options.rate_limit_burst)
             if options.rate_limit
@@ -447,8 +203,8 @@ class HttpPollingClient:
         # R12 request/response callback; default logs at DEBUG only
         self.on_response = options.request_callback or _default_request_callback
         self.retry_stats = RetryStats()
-        # opt-in Finagle-style retry budget shared by all caller threads
-        # of this per-executor client (see retry.RetryBudget)
+        # opt-in Finagle-style retry budget shared by every exchange of
+        # this per-executor client (see retry.RetryBudget)
         self.retry_budget = (
             RetryBudget(
                 ratio=options.retry_budget_ratio,
@@ -457,13 +213,8 @@ class HttpPollingClient:
             if options.retry_budget_ratio is not None
             else None
         )
-        # hedged-request accounting + lazily-created hedge pool (opt-in,
-        # options.hedge_delay); the pool is shared by all caller threads
-        # and sized so concurrent hedged lookups don't serialize
+        # hedged-request accounting (opt-in, options.hedge_delay)
         self.hedge_stats = {"fired": 0, "won": 0}
-        self._hedge_pool_lock = threading.Lock()
-        self._hedge_pool: Optional[ThreadPoolExecutor] = None
-        self._hedge_finalizer: Optional[weakref.finalize] = None
         self._preprocessors: Dict[str, HeaderPreprocessor] = {}
         # with OIDC the Authorization header is CREATED by the connector
         # (bearer fetched at request time), not merely rewritten — so it
@@ -522,111 +273,37 @@ class HttpPollingClient:
             )
         return [payload]
 
-    # -- the state machine (split so async mode can pipeline the phases) -------
+    # -- the state machine, as step sequences for the transport's loop ---------
 
-    def send(self, key_values: Mapping[str, Any]) -> Tuple:
-        """Network phase: build the request and run it with retries. Returns
-        an opaque exchange for :meth:`publish`. The async lookup runs both
-        phases of a key on the same pool thread; the reference instead
-        hands the decode to a second, publish, pool
-        (``AsyncHttpTableLookupFunction.java:94-115``)."""
-        return self._exchange(self.build_request(key_values))
+    def run(self, sequences: Sequence, *, width: int = 1, deadline=None,
+            on_timeout=None) -> List:
+        """Run step sequences (built on :meth:`exchange_steps`) on the
+        transport's loop, up to ``width`` at once, with this client's rate
+        limiter and hedging; see ``wire.HttpTransport.run``."""
+        return self.transport.run(
+            sequences, width=width, deadline=deadline, on_timeout=on_timeout,
+            limiter=self.rate_limiter, hedge_delay=self.options.hedge_delay,
+            hedge_stats=self.hedge_stats,
+        )
 
-    def _send_wire(self, spec: HttpRequestSpec) -> HttpResponse:
-        """One wire attempt — hedged when ``options.hedge_delay`` is set.
+    def exchange_steps(self, spec: HttpRequestSpec, also_success: Tuple = ()):
+        """The step sequence of one exchange (per-key, multi-key and
+        conditional alike): circuit breaker, then :func:`http_retry_steps`,
+        each wire attempt hedged after ``options.hedge_delay``. Returns
+        ``(spec, response, failure)`` for :meth:`publish`.
 
-        Tail-latency hedging (Dean & Barroso, "The Tail at Scale"): if
-        the primary hasn't answered within the delay, fire ONE duplicate
-        and return whichever completes first with a response. The loser
-        is abandoned — its thread finishes (or times out) in the
-        background and its result is dropped; a completed-but-discarded
-        response leaves that thread's keep-alive connection in sync, and
-        an errored one is closed by the transport, so no response
-        desynchronization is possible. When the first completion is an
-        error, the other attempt is awaited (one slow-but-healthy replica
-        still saves the exchange); only if both fail does the error reach
-        the retry layer. The duplicate consumes a rate-limit permit like
-        any other wire request. Default off = reference parity."""
-        delay = self.options.hedge_delay
-        if delay is None:
-            return self.transport.send(spec)
-        with self._hedge_pool_lock:
-            if self._hedge_pool is None:
-                self._hedge_pool = ThreadPoolExecutor(
-                    max_workers=2 * max(1, self.options.pull_pool_size),
-                    thread_name_prefix="http-hedge",
-                )
-                # non-daemon threads + their keep-alive sockets must not
-                # outlive the client in long-lived executor reuse: shut
-                # the pool down when the client is GC'd (or at interpreter
-                # exit) even if close() is never called. The finalizer
-                # references only the pool, never self.
-                self._hedge_finalizer = weakref.finalize(
-                    self, _shutdown_hedge_pool, self._hedge_pool
-                )
-            pool = self._hedge_pool
-        primary = pool.submit(self.transport.send, spec)
-        try:
-            return primary.result(timeout=delay)
-        except _FuturesTimeout:
-            pass  # primary still in flight: hedge
-        with self._hedge_pool_lock:
-            self.hedge_stats["fired"] += 1
-        if self.rate_limiter is not None:
-            self.rate_limiter.acquire()
-        secondary = pool.submit(self.transport.send, spec)
-        pending = {primary, secondary}
-        last_err: Optional[BaseException] = None
-        while pending:
-            done, pending = _futures_wait(pending, return_when=FIRST_COMPLETED)
-            for fut in done:
-                err = fut.exception()
-                if err is None:
-                    if fut is secondary:
-                        with self._hedge_pool_lock:
-                            self.hedge_stats["won"] += 1
-                    return fut.result()
-                last_err = err
-        assert last_err is not None
-        raise last_err
-
-    def close(self) -> None:
-        """Release resources held by the client — today the lazily
-        created hedge pool (2×pull_pool_size non-daemon threads plus
-        their thread-local keep-alive sockets). Safe to call more than
-        once; the client remains usable afterwards (a later hedged send
-        recreates the pool)."""
-        with self._hedge_pool_lock:
-            pool, self._hedge_pool = self._hedge_pool, None
-            finalizer, self._hedge_finalizer = self._hedge_finalizer, None
-        if finalizer is not None:
-            finalizer.detach()
-        if pool is not None:
-            pool.shutdown(wait=False, cancel_futures=True)
-
-    def __enter__(self) -> "HttpPollingClient":
-        return self
-
-    def __exit__(self, *exc: Any) -> None:
-        self.close()
-
-    def _exchange(self, spec: HttpRequestSpec, also_success: Tuple = ()) -> Tuple:
-        """Fire one assembled request with the retry policy; shared by the
-        per-key and multi-key network phases. The circuit breaker (when
-        configured) is consulted BEFORE the wire and fed the exchange
-        outcome: a successfully classified response closes it, an
-        exception / exhausted retry / error status counts as a failure."""
+        The circuit breaker (when configured) is consulted BEFORE the wire
+        and fed the exchange outcome: a successfully classified response
+        closes it, an exception / exhausted retry / error status counts as
+        a failure."""
         breaker = self.circuit_breaker
         if breaker is not None and not breaker.allow():
             return (spec, None, ("circuit breaker open: failing fast", None))
-
         try:
-            response = send_with_retry(
-                self._send_wire,
+            response = yield from http_retry_steps(
                 spec,
                 config=self.options.retry,
                 is_retriable_status=self.checker.is_temporal_error,
-                limiter=self.rate_limiter,
                 stats=self.retry_stats,
                 budget=self.retry_budget,
             )
@@ -649,21 +326,30 @@ class HttpPollingClient:
                 breaker.record_failure()
         return (spec, response, None)
 
+    def send(self, key_values: Mapping[str, Any]) -> Tuple:
+        """Network phase of one per-key lookup: build the request and run
+        its exchange. Returns the exchange for :meth:`publish`."""
+        return self.run([self.exchange_steps(self.build_request(key_values))])[0]
+
+    def close(self) -> None:
+        """Close the transport's idle keep-alive sockets. Safe to call more
+        than once; the client stays usable (it reconnects). A client that
+        is garbage-collected releases its sockets too."""
+        self.transport.close()
+
+    def __enter__(self) -> "HttpPollingClient":
+        return self
+
+    def __exit__(self, *exc: Any) -> None:
+        self.close()
+
     def _classify(
-        self, exchange: Tuple, decode: Callable[[bytes], List], abandoned=None,
-    ) -> Optional[HttpLookupResult]:
+        self, exchange: Tuple, decode: Callable[[bytes], List],
+    ) -> HttpLookupResult:
         """Classify + decode one exchange (CPU-bound); fires the R12
         callback. A failed exchange, an error status or an undecodable
         body goes through ``_on_failure``; an ignored status keeps no
-        rows; otherwise ``rows`` is ``decode(body)``.
-
-        ``abandoned`` (a ``threading.Event``) marks an exchange whose
-        caller already reported it as timed out and discarded its result:
-        then this fires NO observer and NO failure accounting and returns
-        None. It is re-checked right before each side effect, so a
-        straggler that raced past the caller's own check is caught here."""
-        if abandoned is not None and abandoned.is_set():
-            return None
+        rows; otherwise ``rows`` is ``decode(body)``."""
         spec, response, failure = exchange
         if failure is not None:
             message, status_code = failure
@@ -671,8 +357,6 @@ class HttpPollingClient:
                 HttpCompletionState.EXCEPTION, message, status_code=status_code
             )
         if self.on_response is not None:
-            if abandoned is not None and abandoned.is_set():
-                return None
             self.on_response(spec, response)
         headers = response.header_map()
         if response.status in self.ignored_codes:
@@ -717,41 +401,42 @@ class HttpPollingClient:
         ``JavaNetHttpPollingClient.java:166-199``)."""
         return self.publish(self.send(key_values))
 
-    def pull_conditional(
+    def conditional_steps(
         self,
         key_values: Mapping[str, Any],
         etag: str,
         cached_result: "HttpLookupResult",
-        abandoned=None,
-    ) -> Optional["HttpLookupResult"]:
-        """Conditional lookup (beyond-reference): the same request with
-        ``If-None-Match: <etag>``. A 304 revalidates ``cached_result``
-        without re-downloading the body (the caller refreshes its cache
-        TTL); any other status flows through the normal classify/decode
-        path and replaces the entry. 304 counts as success for the
-        circuit breaker — the endpoint answered exactly as asked.
-        ``abandoned`` is as in :meth:`_classify`: once set, no observer
-        fires and the result is None."""
+    ):
+        """Step sequence of a conditional lookup (beyond-reference): the
+        same request with ``If-None-Match: <etag>``. A 304 revalidates
+        ``cached_result`` without re-downloading the body (the caller
+        refreshes its cache TTL); any other status flows through the
+        normal classify/decode path and replaces the entry. 304 counts as
+        success for the circuit breaker — the endpoint answered exactly as
+        asked."""
         base = self.build_request(key_values)
         headers = dict(base.headers)
         headers["If-None-Match"] = etag
         spec = HttpRequestSpec(
             method=base.method, url=base.url, headers=headers, body=base.body
         )
-        exchange = self._exchange(spec, also_success=(304,))
-        if abandoned is not None and abandoned.is_set():
-            return None  # the caller already served the stale entry
+        exchange = yield from self.exchange_steps(spec, also_success=(304,))
         sent_spec, response, failure = exchange
-        if failure is None and response is not None and response.status == 304:
+        if failure is None and response.status == 304:
             if self.on_response is not None:
                 self.on_response(sent_spec, response)
             return cached_result
-        return self._classify(exchange, self._decode, abandoned)
+        return self._classify(exchange, self._decode)
 
     # -- multi-key batch lookup (beyond-reference scale path) ------------------
 
     def send_multi(self, batch_key_values: List[Mapping[str, Any]]) -> Tuple:
-        """Network phase for a multi-key batch lookup: ONE body-based
+        """Network phase for a multi-key batch lookup; see
+        :meth:`multi_steps`."""
+        return self.run([self.multi_steps(batch_key_values)])[0]
+
+    def multi_steps(self, batch_key_values: List[Mapping[str, Any]]):
+        """Step sequence of a multi-key batch lookup: ONE body-based
         request whose payload is the JSON array of key objects. GET
         upgrades to POST (the keys travel in the body); headers, auth
         rewrite, TLS, retry, and rate limiting are identical to the
@@ -785,7 +470,7 @@ class HttpPollingClient:
                 "incompatible with {{placeholder}} URL templates — drop the "
                 "batch size or the template", None,
             ))
-        return self._exchange(spec)
+        return (yield from self.exchange_steps(spec))
 
     def publish_multi(
         self,
@@ -793,7 +478,6 @@ class HttpPollingClient:
         batch_key_values: List[Mapping[str, Any]],
         key_names: List[str],
         key_coercers: Optional[List] = None,
-        abandoned=None,
     ) -> List[HttpLookupResult]:
         """Classify + decode for a batch exchange, fanned back out per key:
         the response is a JSON array of result objects each carrying its
@@ -818,9 +502,7 @@ class HttpPollingClient:
                 )
             return payload
 
-        batch = self._classify(exchange, decode_array, abandoned)
-        if batch is None:
-            return []
+        batch = self._classify(exchange, decode_array)
         if batch.completion_state != HttpCompletionState.SUCCESS:
             return [batch] * len(batch_key_values)
 

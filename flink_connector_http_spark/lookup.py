@@ -4,7 +4,8 @@ Re-expresses the reference's lookup source (SURVEY §2.1 S1-S3, §2.3 J1-J3)
 Spark-first: one narrow ``mapInPandas`` stage — no shuffle, exactly like the
 reference's lookup join stays shuffle-free — with per-Arrow-batch **distinct
 key** extraction (an optimization the reference lacks: it fires one HTTP call
-per probe row, cache aside), a thread-pooled client (reference's async pools,
+per probe row, cache aside), many exchanges in flight on one non-blocking
+socket loop (the reference's async pools,
 ``AsyncHttpTableLookupFunction.java:40-42,94-115``), and a per-executor
 LRU+TTL cache (reference ``DefaultLookupCache`` wiring,
 ``HttpLookupTableSourceFactory.java:241-250``).
@@ -37,8 +38,7 @@ import datetime as _dt
 import decimal
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
-from concurrent.futures import TimeoutError as FuturesTimeoutError
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Tuple, Union
 
@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .cache import LruTtlCache, shared_cache
+from .cache import MAX_TABLES, LruTtlCache, shared_cache
 from .client import HttpPollingClient
 from .options import HttpLookupOptions
 from .types import HttpCompletionState, HttpLookupResult, metadata_schema
@@ -59,10 +59,12 @@ import logging
 
 logger = logging.getLogger(__name__)
 
-#: distinct keys in one probe batch above which the per-key GET model is
-#: known to saturate (BENCH r8: per-key GETs hit an 8x wall at 10x data
-#: while 50-key batch POSTs stayed at 2.5x) — one advisory per executor
-#: names the scale path instead of letting users discover it in prod
+#: distinct keys in one probe batch above which one advisory per executor
+#: names the multi-key batch lookup. The per-key GET path is bound by this
+#: client's CPU, not by the endpoint: on the socket loop, 4000 distinct keys
+#: against a local stub cost about 120 µs of client CPU per key as per-key
+#: GETs and about 33 µs as 50-key POSTs (4-CPU VM, PERF_NOTES "Lookup
+#: exchanges on one loop")
 BATCH_LOOKUP_ADVISORY_THRESHOLD = 200
 _batch_advisory_emitted = False
 
@@ -78,10 +80,11 @@ def _maybe_advise_batch_lookup(n_distinct: int) -> bool:
     _batch_advisory_emitted = True
     logger.warning(
         "http_lookup_join fired %d per-key requests for one probe batch; "
-        "at this key volume the per-key GET model saturates the endpoint "
-        "(measured 8x at 10x data). If the endpoint supports multi-key "
-        "lookup, set http.source.lookup.request.batch.size "
-        "(lookup_batch_size) to batch ~50 keys per POST.",
+        "at this key volume the client's own CPU per request is the limit "
+        "(measured about 120 us a key for per-key GETs against 33 us for "
+        "50-key POSTs). If the endpoint supports multi-key lookup, set "
+        "http.source.lookup.request.batch.size (lookup_batch_size) to "
+        "batch ~50 keys per POST.",
         n_distinct,
     )
     return True
@@ -129,18 +132,29 @@ class HttpLookupTable:
 
 # --- per-executor client singletons (python workers are reused across tasks) -
 
-_CLIENTS: Dict[Tuple, HttpPollingClient] = {}
+#: by table fingerprint, least recently used first; at most ``MAX_TABLES``
+_CLIENTS: "OrderedDict[Tuple, HttpPollingClient]" = OrderedDict()
 _CLIENTS_LOCK = threading.Lock()
 
 
 def _client_for(table: HttpLookupTable) -> HttpPollingClient:
+    """This worker's client for ``table``. Past ``MAX_TABLES`` distinct
+    tables the least recently used client is dropped and its idle sockets
+    are closed (a task still holding it reconnects)."""
     key = table.fingerprint()
+    evicted: List[HttpPollingClient] = []
     with _CLIENTS_LOCK:
         client = _CLIENTS.get(key)
         if client is None:
-            client = HttpPollingClient(url=table.url, options=table.options)
-            _CLIENTS[key] = client
-        return client
+            client = _CLIENTS[key] = HttpPollingClient(
+                url=table.url, options=table.options)
+            while len(_CLIENTS) > MAX_TABLES:
+                evicted.append(_CLIENTS.popitem(last=False)[1])
+        else:
+            _CLIENTS.move_to_end(key)
+    for old in evicted:
+        old.close()
+    return client
 
 
 def _etag_of(result: Optional["HttpLookupResult"]) -> Optional[str]:
@@ -362,50 +376,29 @@ _METADATA = {
 }
 
 
-def _fan_out(opts: HttpLookupOptions, items: Sequence, task, on_timeout) -> List:
-    """Run ``task(item, abandoned)`` for every item; results in item order.
+def _fan_out(client: HttpPollingClient, items: Sequence, steps, on_timeout) -> List:
+    """Run the step sequence ``steps(item)`` of every item on the client's
+    loop (``wire.HttpTransport.run``); results in item order.
 
-    Under ``use_async`` with two or more items the tasks run on
-    ``min(pull_pool_size, async_buffer_capacity, len(items))`` threads (the
+    Under ``use_async`` up to ``min(pull_pool_size, async_buffer_capacity)``
+    exchanges are in flight at once, on the calling thread (the
     reference's async pull pool, ``AsyncHttpTableLookupFunction.java:40-42``;
-    the buffer capacity caps in-flight exchanges) and ``async_timeout`` is
+    the buffer capacity caps in-flight exchanges), and ``async_timeout`` is
     ONE deadline for the whole call, as ``table.exec.async-lookup.timeout``
-    bounds the whole async operation. An item not done by then yields
-    ``on_timeout(item)`` and gets its ``abandoned`` event set: its thread,
-    still in flight, must then fire no observer, since its result is
-    discarded. Otherwise the items run one after another on the calling
-    thread with ``abandoned=None`` (the reference's sync lookup)."""
-    if not opts.use_async or len(items) < 2:
-        return [task(item, None) for item in items]
-    workers = max(1, min(
-        opts.pull_pool_size, opts.async_buffer_capacity, len(items)))
-    deadline = (
-        None if opts.async_timeout is None
-        else time.monotonic() + opts.async_timeout
+    bounds the whole async operation: an item not done by then yields
+    ``on_timeout(item)``, and its socket is closed, so nothing of it can
+    fire an observer later. Otherwise the items run one after another
+    (the reference's sync lookup)."""
+    opts = client.options
+    width, deadline = 1, None
+    if opts.use_async:
+        width = min(opts.pull_pool_size, opts.async_buffer_capacity)
+        if opts.async_timeout is not None:
+            deadline = time.monotonic() + opts.async_timeout
+    return client.run(
+        [steps(item) for item in items], width=width, deadline=deadline,
+        on_timeout=lambda i: on_timeout(items[i]),
     )
-    pool = ThreadPoolExecutor(max_workers=workers)
-    try:
-        futs = [
-            (item, ev, pool.submit(task, item, ev))
-            for item in items
-            for ev in (threading.Event(),)
-        ]
-        results = []
-        for item, ev, fut in futs:
-            try:
-                results.append(fut.result(
-                    None if deadline is None
-                    else max(0.0, deadline - time.monotonic())
-                ))
-            except FuturesTimeoutError:
-                ev.set()
-                fut.cancel()
-                results.append(on_timeout(item))
-        return results
-    finally:
-        # every result is materialized: don't block on a hung exchange
-        # (its socket still dies at request_timeout)
-        pool.shutdown(wait=False, cancel_futures=True)
 
 
 def _enrich_pdf(
@@ -417,9 +410,9 @@ def _enrich_pdf(
     hits_add=_noop_add,
 ) -> Optional[pd.DataFrame]:
     """Enrich ONE probe batch (pandas DataFrame) with HTTP lookups:
-    distinct-key dedup, cache probe + ETag revalidation, thread-pooled /
-    multi-key-batch fetch, then row assembly; shared by the ``mapInPandas``
-    operator and the SQL UDTF. Assembly (coercion, key backfill, emptiness
+    distinct-key dedup, cache probe + ETag revalidation, per-key /
+    multi-key-batch fetch on the client's loop, then row assembly; shared
+    by the ``mapInPandas`` operator and the SQL UDTF. Assembly (coercion, key backfill, emptiness
     rule, array multiply, metadata) runs once per distinct key; one gather
     by each probe row's key code then emits every probe row, in order,
     once per result row of its key. Probe columns keep their dtype; lookup
@@ -448,7 +441,7 @@ def _enrich_pdf(
     )
     distinct: Dict[Tuple, Optional[HttpLookupResult]] = dict.fromkeys(positions)
 
-    # --- cache probe + thread-pooled fetch ----------------------------
+    # --- cache probe + fetch --------------------------------------------
     to_fetch: List[Tuple] = []
     # (key, etag, stale result) triples for conditional refresh
     to_revalidate: List[Tuple[Tuple, str, HttpLookupResult]] = []
@@ -494,10 +487,10 @@ def _enrich_pdf(
     ))
 
     # --- conditional refresh of expired entries (If-None-Match) -------
-    def revalidate(item, abandoned):
+    def revalidate(item):
         kt, etag, prev = item
-        return kt, client.pull_conditional(
-            key_values_of(kt), etag, prev, abandoned=abandoned), True
+        result = yield from client.conditional_steps(key_values_of(kt), etag, prev)
+        return kt, result, True
 
     def serve_stale(item):
         # WITHOUT refreshing the TTL: the entry stays expired, so the
@@ -505,9 +498,7 @@ def _enrich_pdf(
         kt, _etag, prev = item
         return kt, prev, False
 
-    for kt, result, fresh in _fan_out(
-        opts, to_revalidate, revalidate, serve_stale
-    ):
+    for kt, result, fresh in _fan_out(client, to_revalidate, revalidate, serve_stale):
         # 304 → same body, fresh TTL; a stale fallback is not re-cached
         _store_result(distinct, cache if fresh else None, kt, result)
 
@@ -527,14 +518,11 @@ def _enrich_pdf(
             for i in range(0, len(to_fetch), batch_size)
         ]
 
-        def fetch_chunk(chunk, abandoned):
+        def fetch_chunk(chunk):
             kvs = [key_values_of(kt) for kt in chunk]
-            exchange = client.send_multi(kvs)
-            if abandoned is not None and abandoned.is_set():
-                return []  # timed out: publish nothing, fire no observer
+            exchange = yield from client.multi_steps(kvs)
             return list(zip(chunk, client.publish_multi(
-                exchange, kvs, leaf_names, key_coercers,
-                abandoned=abandoned)))
+                exchange, kvs, leaf_names, key_coercers)))
 
         def chunk_timed_out(chunk):
             kvs = [key_values_of(kt) for kt in chunk]
@@ -543,22 +531,19 @@ def _enrich_pdf(
 
         fetched = [
             pair
-            for part in _fan_out(opts, chunks, fetch_chunk, chunk_timed_out)
+            for part in _fan_out(client, chunks, fetch_chunk, chunk_timed_out)
             for pair in part
         ]
     elif to_fetch:
         _maybe_advise_batch_lookup(len(to_fetch))
 
-        def fetch_key(kt, abandoned):
-            if abandoned is None:
-                return kt, client.pull(key_values_of(kt))
-            exchange = client.send(key_values_of(kt))
-            if abandoned.is_set():
-                return None  # timed out: publish nothing, fire no observer
+        def fetch_key(kt):
+            exchange = yield from client.exchange_steps(
+                client.build_request(key_values_of(kt)))
             return kt, client.publish(exchange)
 
         fetched = _fan_out(
-            opts, to_fetch, fetch_key,
+            client, to_fetch, fetch_key,
             lambda kt: (kt, client.publish(timed_out)),
         )
 
@@ -617,7 +602,7 @@ def http_lookup_join(
     lookup columns (projection pushdown); ``metadata_columns`` appends the
     requested virtual columns; ``lookup_prefix`` renames lookup output
     columns to avoid probe collisions. ``num_partitions`` repartitions the
-    probe first — total in-flight requests = partitions × pull pool size,
+    probe first — total in-flight requests = partitions × pull_pool_size,
     the knob that matters when the probe arrives in few fat partitions
     (a narrow parquet scan) but the endpoint has headroom.
     """

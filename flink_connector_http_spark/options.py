@@ -213,18 +213,22 @@ class HttpLookupOptions:
     # Tune this, not request_timeout, for fast failover off a dead
     # endpoint in a pool.
     connection_timeout: Optional[float] = None        # seconds
+    # http.source.lookup.request.thread-pool.size: under use_async, the
+    # exchanges in flight at once per partition (the key keeps the
+    # reference's name; no thread is started — one non-blocking socket
+    # loop on the task's thread drives them, see wire.py)
     pull_pool_size: int = 8
     # False → strictly sequential per-key firing (the reference's sync
-    # LookupFunction); True → one pool of pull_pool_size workers per probe
-    # batch, each fetching and decoding its own exchanges (asyncPolling;
-    # the reference's second, response/publish, pool is not modelled and
+    # LookupFunction); True → up to pull_pool_size exchanges in flight per
+    # probe batch, each decoded as it lands (asyncPolling; the reference's
+    # second, response/publish, pool is not modelled and
     # http.source.lookup.response.thread-pool.size is ignored —
     # AsyncHttpTableLookupFunction.java:40-42,94-115)
     use_async: bool = False
     # host-engine async knobs (Flink table.exec.async-lookup.*): capacity
-    # caps concurrent in-flight exchanges (pool size =
-    # min(pull_pool_size, async_buffer_capacity)) on the per-key, batch
-    # and revalidation paths alike; timeout is ONE deadline for the whole
+    # caps concurrent in-flight exchanges (min(pull_pool_size,
+    # async_buffer_capacity)) on the per-key, batch and revalidation
+    # paths alike; timeout is ONE deadline for the whole
     # probe batch — exchanges not done when it lapses fail (or yield an
     # EXCEPTION-state row under continue_on_error; a revalidation serves
     # its stale entry) even if their response lands moments later
@@ -280,8 +284,8 @@ class HttpLookupOptions:
     circuit_breaker_reset: float = 30.0               # seconds
     # hedged requests (tail-latency): if a wire attempt hasn't answered
     # within this many seconds, fire ONE duplicate and take whichever
-    # responds first; the loser is abandoned (its socket dies at the
-    # request timeout). Pick a p95-ish endpoint latency. OPT-IN and off
+    # responds first; the loser's socket is closed. Pick a p95-ish
+    # endpoint latency. OPT-IN and off
     # by default (reference parity — HttpClientWithRetry.java has no
     # hedging); enable only for endpoints where a duplicate in-flight
     # request is safe (idempotent reads — which lookup queries are).
@@ -289,7 +293,7 @@ class HttpLookupOptions:
     # otherwise stalls a whole partition.
     hedge_delay: Optional[float] = None
     # HTTP protocol version pin (reference LOOKUP_HTTP_VERSION). The
-    # stdlib transport negotiates HTTP/1.1 unconditionally, so the only
+    # transport (wire.py) speaks HTTP/1.1 only, so the only
     # accepted pin is HTTP_1_1 (a validated no-op, matching what the
     # reference's Version.valueOf + builder.version() does for 1.1
     # endpoints); HTTP_2 raises at plan time instead of silently not

@@ -36,10 +36,11 @@ from __future__ import annotations
 import threading
 import time
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional, TypeVar
+from typing import Any, Callable, Generator, Iterator, Optional, TypeVar
 
 __all__ = [
-    "RetryConfig", "HttpRetryError", "run_with_retry", "RetryStats",
+    "RetryConfig", "HttpRetryError", "retry_steps", "run_steps",
+    "run_with_retry", "RetryStats",
     "CircuitBreaker", "RetryBudget", "parse_retry_after",
 ]
 
@@ -192,27 +193,30 @@ class RetryBudget:
             return False
 
 
-def run_with_retry(
-    send: Callable[[], T],
+def retry_steps(
+    request,
     *,
     config: RetryConfig,
     status_of: Callable[[T], int],
     is_retriable_status: Callable[[int], bool],
     retriable_exceptions: tuple = (OSError,),
-    sleep: Optional[Callable[[float], None]] = None,
     stats: Optional[RetryStats] = None,
     retry_after_of: Optional[Callable[[T], Optional[float]]] = None,
     budget: Optional["RetryBudget"] = None,
-) -> T:
-    """Invoke ``send`` up to ``max_retries + 1`` times.
+) -> Generator[Any, Any, T]:
+    """The retry policy as a step sequence: a generator that yields
+    ``request`` for each of up to ``max_retries + 1`` wire attempts and a
+    ``float`` for each wait between them. Its driver sends each attempt's
+    response back in, or throws the attempt's exception in: a blocking one
+    (:func:`run_steps`) or the transport's loop (``wire.HttpTransport.run``).
 
-    A retry happens when ``send`` raises one of ``retriable_exceptions`` or
-    its response status is retriable. Non-retriable responses are returned
-    as-is (caller classifies success/error). Exhaustion raises
-    :class:`HttpRetryError`.
+    An attempt is retried when it raises one of ``retriable_exceptions`` or
+    its response status is retriable; any other exception propagates.
+    Returns the first non-retriable response (the caller classifies
+    success/error); exhaustion raises :class:`HttpRetryError`.
 
     ``retry_after_of`` (optional) extracts the server's ``Retry-After``
-    hint (seconds) from a retriable response: the next sleep becomes
+    hint (seconds) from a retriable response: the next wait becomes
     ``max(policy delay, hint)`` capped at ``config.max_backoff`` — a
     429/503 with an honest hint is respected instead of hammered, but a
     hostile header can never stall a task longer than the backoff cap.
@@ -221,12 +225,7 @@ def run_with_retry(
     deposits, each retry must withdraw — an exhausted budget raises
     :class:`HttpRetryError` immediately instead of amplifying an
     outage with the full retry schedule.
-
-    ``sleep`` defaults to ``time.sleep`` looked up at call time, so a
-    test that patches ``time.sleep`` sees every retry sleep.
     """
-    if sleep is None:
-        sleep = time.sleep
     if budget is not None:
         budget.deposit()
     delays = config.delays()
@@ -235,7 +234,7 @@ def run_with_retry(
     for attempt in range(1, config.max_attempts + 1):
         server_hint: Optional[float] = None
         try:
-            response = send()
+            response = yield request
         except retriable_exceptions as exc:  # noqa: PERF203 — retry loop
             last_exc, last_status = exc, None
         else:
@@ -264,13 +263,71 @@ def run_with_retry(
             delay = next(delays)
             if server_hint is not None:
                 delay = min(max(delay, server_hint), config.max_backoff)
-            sleep(delay)
+            yield float(delay)
     raise HttpRetryError(
         f"HTTP request failed after {config.max_attempts} attempts"
         + (f" (last status {last_status})" if last_status is not None else "")
         + (f" (last error: {last_exc})" if last_exc is not None else ""),
         status_code=last_status,
         cause=last_exc,
+    )
+
+
+def run_steps(
+    steps: Generator,
+    attempt: Callable[[Any], Any],
+    sleep: Optional[Callable[[float], None]] = None,
+):
+    """Drive a step sequence (see :func:`retry_steps`) on the calling
+    thread: ``attempt(step)`` for each wire attempt, ``sleep(seconds)``
+    for each wait. ``sleep`` defaults to ``time.sleep`` looked up at call
+    time, so a test that patches ``time.sleep`` sees every retry sleep.
+    Returns the sequence's result."""
+    if sleep is None:
+        sleep = time.sleep
+    value: Any = None
+    error: Optional[Exception] = None
+    while True:
+        try:
+            step = steps.send(value) if error is None else steps.throw(error)
+        except StopIteration as stop:
+            return stop.value
+        value = error = None
+        if type(step) is float:
+            sleep(step)
+            continue
+        try:
+            value = attempt(step)
+        except Exception as exc:  # noqa: BLE001 — the sequence classifies it
+            error = exc
+
+
+def run_with_retry(
+    send: Callable[[], T],
+    *,
+    config: RetryConfig,
+    status_of: Callable[[T], int],
+    is_retriable_status: Callable[[int], bool],
+    retriable_exceptions: tuple = (OSError,),
+    sleep: Optional[Callable[[float], None]] = None,
+    stats: Optional[RetryStats] = None,
+    retry_after_of: Optional[Callable[[T], Optional[float]]] = None,
+    budget: Optional["RetryBudget"] = None,
+) -> T:
+    """Invoke ``send`` under :func:`retry_steps`, blocking."""
+    return run_steps(
+        retry_steps(
+            send,
+            config=config,
+            status_of=status_of,
+            is_retriable_status=is_retriable_status,
+            retriable_exceptions=retriable_exceptions,
+            stats=stats,
+            retry_after_of=retry_after_of,
+            budget=budget,
+        ),
+        lambda call: call(),
+        sleep,
     )
 
 

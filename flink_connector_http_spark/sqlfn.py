@@ -26,13 +26,13 @@ below — a Spark 4 Python UDTF that buffers probe rows and flushes them
 in batches through the SAME vectorized machinery as
 :func:`~flink_connector_http_spark.lookup.http_lookup_join`
 (``lookup._enrich_pdf``: distinct-key dedup, per-executor client/cache
-singletons, pooled or multi-key-batch fetch), completing reference
+singletons, per-key or multi-key-batch fetch), completing reference
 parity: the reference's lookup function IS a UDTF
 (``HttpTableLookupFunction.java:48``). The other registered SQL
 spellings are ``http_sql_lookup_join`` (SQL-derived distinct keys →
 ``http_lookup_join`` → SQL join back) and ``http_sql_ddl_scan``
 (``CREATE TEMPORARY VIEW ... USING http``, paged parallel scan). The
-transport everywhere is keep-alive-pooled per executor thread, so a
+transport everywhere keeps its sockets alive per executor, so a
 per-call cost is one round trip, not one connection.
 """
 
@@ -442,7 +442,7 @@ class HttpLookupUdtf:
     NOT row-at-a-time: probe rows buffer per task and flush in
     1024-row batches through :func:`lookup._enrich_pdf` — the exact
     vectorized machinery behind ``http_lookup_join`` (distinct-key dedup,
-    per-executor client + cache singletons, thread-pooled / multi-key
+    per-executor client + cache singletons, per-key / multi-key
     batch fetch, emptiness rule, key backfill, array multiply, metadata
     columns), so request volume is bounded by distinct keys per batch.
 

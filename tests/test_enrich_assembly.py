@@ -13,8 +13,9 @@ import pytest
 
 from pyspark.sql import types as T
 
-from flink_connector_http_spark import HttpLookupTable
+from flink_connector_http_spark import HttpLookupOptions, HttpLookupTable
 from flink_connector_http_spark.lookup import _coerce, _EnrichConfig, _enrich_pdf, _extract_path
+from flink_connector_http_spark.retry import run_steps
 from flink_connector_http_spark.types import (
     METADATA_COLUMN_NAMES,
     HttpCompletionState,
@@ -34,16 +35,30 @@ PAIRS = (("cust", "id"), ("addr.zip", "zip"))
 
 
 class FakeClient:
-    """Serves ``results[key tuple]`` to per-key pulls and counts them."""
+    """Serves ``results[key tuple]`` to per-key exchanges and counts them:
+    each exchange is a step sequence that needs no wire, and ``run``
+    drives them one after another, as the sync lookup does."""
+
+    options = HttpLookupOptions()
 
     def __init__(self, results):
         self.results = results
         self.pulled = []
 
-    def pull(self, key_values):
+    def build_request(self, key_values):
+        return key_values
+
+    def exchange_steps(self, key_values):
         kt = (key_values["id"], key_values["zip"])
         self.pulled.append(kt)
         return self.results[kt]
+        yield  # noqa: unreachable — makes this a step sequence
+
+    def publish(self, result):
+        return result
+
+    def run(self, sequences, **_):
+        return [run_steps(steps, attempt=None) for steps in sequences]
 
 
 def ok(*rows, headers=None):

@@ -287,21 +287,22 @@ class TestAsyncKnobs:
 
         stub_server.stub("/bounded", responder)
         probe = spark.createDataFrame([Row(key=i) for i in range(12)]).coalesce(1)
-        # per-key GETs, then one-key POST chunks: the capacity bounds both
-        for batch_size in (None, 1):
+        # per-key GETs, then one-key POST chunks: the capacity bounds both;
+        # then per-key GETs again, bounded by the pull pool size instead
+        for batch_size, pool_size, capacity in ((None, 8, 2), (1, 8, 2), (None, 2, 8)):
             active["max"] = 0
             table = HttpLookupTable(
                 url=stub_server.url("/bounded"),
                 schema=NATION_SCHEMA,
                 options=HttpLookupOptions(
                     method="GET", use_async=True,
-                    pull_pool_size=8, async_buffer_capacity=2,
+                    pull_pool_size=pool_size, async_buffer_capacity=capacity,
                     lookup_batch_size=batch_size,
                 ),
             )
             out = http_lookup_join(probe, table, on={"key": "n_nationkey"}).collect()
             assert len(out) == 12
-            # capacity caps in-flight requests
+            # min(pull_pool_size, capacity) caps in-flight requests
             assert active["max"] <= 2, f"lookup_batch_size={batch_size}"
 
     def test_lookup_metrics_accumulators(self, spark, stub_server):

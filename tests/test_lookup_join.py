@@ -610,12 +610,16 @@ def test_batch_lookup_async_timeout_yields_timeout_results(spark, stub_server):
             continue_on_error=True,
         ),
     )
-    start = _time.monotonic()
+    probe = orders_df(spark, ids=(1, 2)).coalesce(1)
     out = http_lookup_join(
-        orders_df(spark, ids=(1, 2)).coalesce(1), table,
+        probe, table,
         on={"cust_id": "id"},
         metadata_columns=["http-completion-state", "error-string"],
     )
+    # warm-up on the same session: the clock then covers the lookup, not
+    # the Python workers' start-up
+    probe.mapInPandas(lambda batches: batches, schema=probe.schema).collect()
+    start = _time.monotonic()
     rows = out.collect()
     elapsed = _time.monotonic() - start
     assert len(rows) == 2
@@ -704,67 +708,6 @@ def test_circuit_breaker_short_circuits_after_threshold(spark, stub_server):
     for r in rows[2:]:
         assert r["http-completion-state"] == "EXCEPTION"
         assert "circuit breaker open" in r["error-string"]
-
-
-def test_publish_multi_rechecks_abandoned_event_before_side_effects():
-    """Round-5 ADVICE residual race: the caller can abandon a chunk
-    BETWEEN fetch_chunk's check and the publish phase. publish_multi now
-    re-checks the event itself — at entry and again right before firing
-    on_response — so a straggler that raced past the caller-side check
-    still fires no observers and no failure accounting."""
-    import threading
-
-    from flink_connector_http_spark.client import (
-        HttpPollingClient,
-        HttpResponse,
-    )
-
-    calls = []
-    client = HttpPollingClient(
-        url="http://unused.invalid/",
-        options=HttpLookupOptions(
-            method="GET",
-            request_callback=lambda s, r: calls.append("fired"),
-        ),
-    )
-    resp = HttpResponse(200, [], b'[{"id": 1, "name": "a"}]')
-    exchange = (object(), resp, None)
-
-    # abandoned before entry: nothing fires, empty result
-    ev = threading.Event()
-    ev.set()
-    assert client.publish_multi(exchange, [{"id": 1}], ["id"],
-                                abandoned=ev) == []
-    assert calls == []
-
-    # abandoned BETWEEN the entry check and on_response (the exact race):
-    # first is_set() poll says alive, second says abandoned
-    class _FlipEvent:
-        def __init__(self):
-            self.polls = 0
-
-        def is_set(self):
-            self.polls += 1
-            return self.polls >= 2
-
-    flip = _FlipEvent()
-    assert client.publish_multi(exchange, [{"id": 1}], ["id"],
-                                abandoned=flip) == []
-    assert calls == []
-    assert flip.polls >= 2
-
-    # failure-path accounting is also suppressed for an abandoned chunk
-    ev2 = threading.Event()
-    ev2.set()
-    fail_exchange = (None, None, ("boom", None))
-    assert client.publish_multi(fail_exchange, [{"id": 1}], ["id"],
-                                abandoned=ev2) == []
-    assert calls == []
-
-    # sanity: a live chunk still publishes and fires exactly one callback
-    out = client.publish_multi(exchange, [{"id": 1}], ["id"])
-    assert len(out) == 1 and out[0].rows
-    assert calls == ["fired"]
 
 
 def test_cache_revalidates_with_etag(spark, stub_server):
@@ -1087,57 +1030,81 @@ def test_hedge_survives_primary_error_and_counts_stats(stub_server):
     assert client.hedge_stats["won"] == 1
 
 
-def test_hedge_pool_released_on_close_and_gc(stub_server):
-    """The lazily created hedge pool (non-daemon threads + keep-alive
-    sockets) must not outlive the client: close() shuts it down, and a
-    client that is simply dropped (long-lived executor reuse, no close
-    call) releases it via the GC finalizer."""
+def test_close_and_gc_release_client_sockets(stub_server):
+    """A client's keep-alive sockets do not outlive it: close() releases
+    them (and stays idempotent, the client usable), and a client that is
+    simply dropped (long-lived executor reuse, no close call) releases
+    them when it is garbage-collected."""
     import gc
-    import threading as _threading
-    import time as _time
 
     from flink_connector_http_spark.client import HttpPollingClient
 
-    def responder(request):
-        _time.sleep(0.3)
-        return json_response(CUSTOMERS[1])
+    stub_server.stub("/close", lambda request: json_response(CUSTOMERS[1]))
 
-    stub_server.stub("/hedge-close", responder)
+    def idle_sockets(client):
+        return [c.sock for pool in client.transport._idle.values()
+                for c in pool]
 
-    def hedge_threads():
-        return [t for t in _threading.enumerate()
-                if t.name.startswith("http-hedge")]
-
-    def wait_gone(deadline=5.0):
-        end = _time.monotonic() + deadline
-        while _time.monotonic() < end:
-            if not any(t.is_alive() for t in hedge_threads()):
-                return True
-            _time.sleep(0.05)
-        return False
-
-    assert not hedge_threads()
     opts = HttpLookupOptions(method="GET", hedge_delay=0.05)
-    # explicit close(): idempotent, pool torn down
-    with HttpPollingClient(url=stub_server.url("/hedge-close"),
+    with HttpPollingClient(url=stub_server.url("/close"),
                            options=opts) as client:
         client.pull({"id": 1})
-        assert hedge_threads()
+        socks = idle_sockets(client)
+        assert len(socks) == 1 and socks[0].fileno() >= 0
+    assert socks[0].fileno() == -1, "close() left the socket open"
     client.close()  # second call is a no-op
-    assert wait_gone(), "close() left hedge threads running"
+    assert idle_sockets(client) == []
+    assert client.pull({"id": 1}).rows  # still usable: it reconnects
     # GC path: no close() call at all
-    client2 = HttpPollingClient(url=stub_server.url("/hedge-close"),
-                                options=opts)
+    client2 = HttpPollingClient(url=stub_server.url("/close"), options=opts)
     client2.pull({"id": 1})
-    assert hedge_threads()
+    socks = idle_sockets(client2)
+    assert len(socks) == 1 and socks[0].fileno() >= 0
     del client2
     gc.collect()
-    assert wait_gone(), "finalizer left hedge threads running after GC"
+    assert socks[0].fileno() == -1, "GC left the socket open"
+
+
+def test_worker_registries_keep_the_most_recent_tables(stub_server, monkeypatch):
+    """Every fresh table fingerprint gets a client and a cache in the
+    worker; the worker keeps only the ``MAX_TABLES`` most recently used
+    of each, and an evicted client's keep-alive sockets are closed."""
+    from collections import OrderedDict
+
+    import flink_connector_http_spark.cache as cache_mod
+    import flink_connector_http_spark.lookup as lookup_mod
+
+    monkeypatch.setattr(lookup_mod, "_CLIENTS", OrderedDict())
+    monkeypatch.setattr(cache_mod, "_REGISTRY", OrderedDict())
+    bound = cache_mod.MAX_TABLES
+    stub_server.stub("/reg", lambda request: json_response(CUSTOMERS[1]))
+
+    def use(i):
+        table = HttpLookupTable(
+            url=stub_server.url(f"/reg?pass={i}"), schema=CUSTOMER_SCHEMA,
+            options=HttpLookupOptions(cache=LookupCacheConfig(max_rows=10)))
+        client = lookup_mod._client_for(table)
+        client.pull({"id": 1})
+        cache_mod.shared_cache(table.fingerprint(), table.options.cache)
+        (pool,) = client.transport._idle.values()
+        return pool[0].sock
+
+    socks = [use(i) for i in range(bound + 2)]
+    assert len(lookup_mod._CLIENTS) == bound
+    assert len(cache_mod._REGISTRY) == bound
+    assert [s.fileno() for s in socks[:2]] == [-1, -1]  # evicted: closed
+    assert all(s.fileno() >= 0 for s in socks[2:])
+    # least recently USED goes first: touching table 2 spares it
+    use(2)
+    socks.append(use(bound + 2))
+    assert socks[2].fileno() >= 0 and socks[3].fileno() == -1
+    assert len(lookup_mod._CLIENTS) == len(cache_mod._REGISTRY) == bound
 
 
 class TestBatchLookupAdvisory:
     """A large per-key probe batch logs a one-time advisory naming the
-    multi-key batch-lookup config (the known 8x saturation footgun)."""
+    multi-key batch-lookup config (per-key GETs cost the client about 3.5x
+    the CPU per key of 50-key POSTs)."""
 
     def setup_method(self):
         import flink_connector_http_spark.lookup as L
