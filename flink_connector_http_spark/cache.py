@@ -133,8 +133,11 @@ class LruTtlCache:
 #: lookup tables a python worker keeps a client and a cache for. Every
 #: distinct table fingerprint (URL, schema, options) gets its own, about
 #: 3.5 MB for a 2k-key table; without a bound a long-lived worker keeps
-#: every table it ever saw. Four covers a plan's chained lookups.
-MAX_TABLES = 4
+#: every table it ever saw. Running the 26 ``http_*`` registry queries on
+#: one SparkSession put at most 5 tables in one worker (3 to 5 across 8
+#: workers); 8 keeps all of those with room to spare. A worker that
+#: rotates through more live tables than this refetches what it evicted.
+MAX_TABLES = 8
 
 #: least recently used first
 _REGISTRY: "OrderedDict[Tuple, LruTtlCache]" = OrderedDict()

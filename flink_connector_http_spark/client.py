@@ -295,7 +295,9 @@ class HttpPollingClient:
         The circuit breaker (when configured) is consulted BEFORE the wire
         and fed the exchange outcome: a successfully classified response
         closes it, an exception / exhausted retry / error status counts as
-        a failure."""
+        a failure, and so does an exchange the loop closes unfinished at
+        its deadline (a half-open trial must not stay in flight for good,
+        and an endpoint that always hangs must still trip the breaker)."""
         breaker = self.circuit_breaker
         if breaker is not None and not breaker.allow():
             return (spec, None, ("circuit breaker open: failing fast", None))
@@ -307,6 +309,10 @@ class HttpPollingClient:
                 stats=self.retry_stats,
                 budget=self.retry_budget,
             )
+        except GeneratorExit:
+            if breaker is not None:
+                breaker.record_failure()
+            raise
         except HttpRetryError as err:
             if breaker is not None:
                 breaker.record_failure()
@@ -431,8 +437,10 @@ class HttpPollingClient:
     # -- multi-key batch lookup (beyond-reference scale path) ------------------
 
     def send_multi(self, batch_key_values: List[Mapping[str, Any]]) -> Tuple:
-        """Network phase for a multi-key batch lookup; see
-        :meth:`multi_steps`."""
+        """Network phase for a multi-key batch lookup, blocking; see
+        :meth:`multi_steps`. The lookup itself runs ``multi_steps`` on the
+        loop; this stays for callers that wrap the network phase (the
+        benchmark's ``perfbench/trace.py`` ``TracedClient`` names it)."""
         return self.run([self.multi_steps(batch_key_values)])[0]
 
     def multi_steps(self, batch_key_values: List[Mapping[str, Any]]):

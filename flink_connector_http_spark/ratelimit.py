@@ -14,6 +14,9 @@ Semantics: a token bucket holding at most ``burst`` permits, refilled at
 worker thread until a permit is available, so backpressure propagates
 naturally — into the ``mapInPandas`` batch on the lookup side and into
 the writer pool on the sink side — instead of queueing unbounded work.
+The lookup's loop uses :meth:`TokenBucket.try_acquire` instead and turns
+the wait into a timer, so a permit wait never blocks the loop past its
+``async_timeout`` deadline.
 
 The bound is **per task**: a job running N concurrent tasks against the
 same endpoint issues at most ``N × rate`` requests/second, so size
@@ -65,27 +68,35 @@ class TokenBucket:
         self._clock = clock
         self._sleep = sleep
 
+    def try_acquire(self, permits: float = 1.0) -> float:
+        """Take ``permits`` tokens when they are available and return 0.0;
+        otherwise take nothing and return the seconds until they would be
+        (a caller that must not block waits that long, then asks again)."""
+        with self._lock:
+            now = self._clock()
+            if self._last is None:
+                self._last = now
+            self._tokens = min(
+                self.capacity, self._tokens + (now - self._last) * self.rate
+            )
+            self._last = now
+            # epsilon absorbs float rounding in refill arithmetic — a
+            # deficit of ~1e-16 tokens must not turn into a sleep too
+            # small to advance the clock (livelock under a fake clock,
+            # a pointless syscall under the real one)
+            if self._tokens >= permits - 1e-9:
+                self._tokens = max(0.0, self._tokens - permits)
+                return 0.0
+            return (permits - self._tokens) / self.rate
+
     def acquire(self, permits: float = 1.0) -> float:
         """Block until ``permits`` tokens are available; returns the total
         time slept (0.0 when the bucket had headroom)."""
         slept = 0.0
         while True:
-            with self._lock:
-                now = self._clock()
-                if self._last is None:
-                    self._last = now
-                self._tokens = min(
-                    self.capacity, self._tokens + (now - self._last) * self.rate
-                )
-                self._last = now
-                # epsilon absorbs float rounding in refill arithmetic — a
-                # deficit of ~1e-16 tokens must not turn into a sleep too
-                # small to advance the clock (livelock under a fake clock,
-                # a pointless syscall under the real one)
-                if self._tokens >= permits - 1e-9:
-                    self._tokens = max(0.0, self._tokens - permits)
-                    return slept
-                wait = (permits - self._tokens) / self.rate
+            wait = self.try_acquire(permits)
+            if not wait:
+                return slept
             # sleep outside the lock so concurrent workers refill/compete
             # fairly; re-check on wake (another thread may have drained it)
             self._sleep(wait)

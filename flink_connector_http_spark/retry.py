@@ -39,8 +39,7 @@ from dataclasses import dataclass
 from typing import Any, Callable, Generator, Iterator, Optional, TypeVar
 
 __all__ = [
-    "RetryConfig", "HttpRetryError", "retry_steps", "run_steps",
-    "run_with_retry", "RetryStats",
+    "RetryConfig", "HttpRetryError", "retry_steps", "run_steps", "RetryStats",
     "CircuitBreaker", "RetryBudget", "parse_retry_after",
 ]
 
@@ -300,35 +299,6 @@ def run_steps(
             value = attempt(step)
         except Exception as exc:  # noqa: BLE001 — the sequence classifies it
             error = exc
-
-
-def run_with_retry(
-    send: Callable[[], T],
-    *,
-    config: RetryConfig,
-    status_of: Callable[[T], int],
-    is_retriable_status: Callable[[int], bool],
-    retriable_exceptions: tuple = (OSError,),
-    sleep: Optional[Callable[[float], None]] = None,
-    stats: Optional[RetryStats] = None,
-    retry_after_of: Optional[Callable[[T], Optional[float]]] = None,
-    budget: Optional["RetryBudget"] = None,
-) -> T:
-    """Invoke ``send`` under :func:`retry_steps`, blocking."""
-    return run_steps(
-        retry_steps(
-            send,
-            config=config,
-            status_of=status_of,
-            is_retriable_status=is_retriable_status,
-            retriable_exceptions=retriable_exceptions,
-            stats=stats,
-            retry_after_of=retry_after_of,
-            budget=budget,
-        ),
-        lambda call: call(),
-        sleep,
-    )
 
 
 class CircuitBreaker:

@@ -664,8 +664,6 @@ class _Loop:
             heapq.heappush(self.timers, (
                 time.monotonic() + step, next(self.tie), self._wake, seq, None))
             return
-        if self.limiter is not None:
-            self.limiter.acquire()
         try:
             seq.request = self.transport._frame(step)
         except Exception as exc:  # noqa: BLE001 — the attempt's failure
@@ -676,11 +674,28 @@ class _Loop:
             self._advance(seq, None, err)
             return
         seq.attempt += 1
+        self._start(seq, seq.attempt)
+
+    def _permit(self, retry, seq: _Seq, token) -> bool:
+        """Take one limiter permit; when none is free yet, schedule
+        ``retry(seq, token)`` for when one is due and return False."""
+        if self.limiter is None:
+            return True
+        wait = self.limiter.try_acquire()
+        if not wait:
+            return True
+        heapq.heappush(self.timers, (
+            time.monotonic() + wait, next(self.tie), retry, seq, token))
+        return False
+
+    def _start(self, seq: _Seq, attempt: int) -> None:
+        if not self._permit(self._start, seq, attempt):
+            return
         self._launch(seq, hedge=False, reuse=True)
         if self.hedge_delay is not None:
             heapq.heappush(self.timers, (
                 time.monotonic() + self.hedge_delay, next(self.tie),
-                self._hedge, seq, seq.attempt))
+                self._hedge, seq, attempt))
 
     def _wake(self, seq: _Seq, _token) -> None:
         self._advance(seq, None, None)
@@ -688,11 +703,11 @@ class _Loop:
     def _hedge(self, seq: _Seq, attempt: int) -> None:
         if seq.attempt != attempt or len(seq.wires) != 1 or seq.wires[0].hedge:
             return  # the attempt is over, or already hedged
+        if not self._permit(self._hedge, seq, attempt):
+            return
         if self.hedge_stats is not None:
             with self.transport._lock:  # other threads may share the client
                 self.hedge_stats["fired"] += 1
-        if self.limiter is not None:
-            self.limiter.acquire()
         self._launch(seq, hedge=True, reuse=True)
 
     # -- wire attempts -------------------------------------------------------------

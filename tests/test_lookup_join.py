@@ -1101,6 +1101,40 @@ def test_worker_registries_keep_the_most_recent_tables(stub_server, monkeypatch)
     assert len(lookup_mod._CLIENTS) == len(cache_mod._REGISTRY) == bound
 
 
+def test_worker_registries_keep_every_table_within_the_bound(stub_server, monkeypatch):
+    """A worker that rotates through ``MAX_TABLES`` tables keeps each
+    one's client and cached entries: the second round is all cache hits
+    and sends no request."""
+    from collections import OrderedDict
+
+    import flink_connector_http_spark.cache as cache_mod
+    import flink_connector_http_spark.lookup as lookup_mod
+
+    monkeypatch.setattr(lookup_mod, "_CLIENTS", OrderedDict())
+    monkeypatch.setattr(cache_mod, "_REGISTRY", OrderedDict())
+    stub_server.stub("/rot", lambda request: json_response(CUSTOMERS[1]))
+    cfg = LookupCacheConfig(max_rows=10)
+    tables = [
+        HttpLookupTable(url=stub_server.url(f"/rot?table={i}"), schema=CUSTOMER_SCHEMA,
+                        options=HttpLookupOptions(cache=cfg))
+        for i in range(cache_mod.MAX_TABLES)
+    ]
+
+    def lookup(table):
+        cache = cache_mod.shared_cache(table.fingerprint(), cfg)
+        if cache.get((1,)) is None:
+            cache.put((1,), lookup_mod._client_for(table).pull({"id": 1}))
+        return lookup_mod._client_for(table), cache
+
+    first = [lookup(table) for table in tables]
+    sent = len(stub_server.recorded("/rot"))
+    second = [lookup(table) for table in tables]
+    assert sent == cache_mod.MAX_TABLES
+    assert len(stub_server.recorded("/rot")) == sent  # no request in round two
+    assert all(a[0] is b[0] and a[1] is b[1] for a, b in zip(first, second))
+    assert all(cache.hits == 1 for _client, cache in second)
+
+
 class TestBatchLookupAdvisory:
     """A large per-key probe batch logs a one-time advisory naming the
     multi-key batch-lookup config (per-key GETs cost the client about 3.5x

@@ -29,7 +29,8 @@ from flink_connector_http_spark.request import build_lookup_request, flatten_key
 from flink_connector_http_spark.retry import (
     HttpRetryError,
     RetryConfig,
-    run_with_retry,
+    retry_steps,
+    run_steps,
 )
 from flink_connector_http_spark.status import (
     HttpResponseChecker,
@@ -123,12 +124,18 @@ class TestSinkErrorCodeChecker:
             SinkErrorCodeChecker().is_error(99)
 
 
+def _retried(send, *, sleep, **policy):
+    """Call ``send`` under the retry policy, blocking: ``retry_steps``
+    yields ``send`` for each attempt and a float for each sleep."""
+    return run_steps(retry_steps(send, **policy), lambda call: call(), sleep)
+
+
 # --- R4: retry -------------------------------------------------------------------
 
 class TestRetry:
     def test_success_first_attempt_no_sleep(self):
         sleeps = []
-        result = run_with_retry(
+        result = _retried(
             lambda: 200,
             config=RetryConfig(max_retries=3),
             status_of=lambda r: r,
@@ -140,7 +147,7 @@ class TestRetry:
     def test_retries_then_succeeds(self):
         responses = iter([503, 503, 200])
         sleeps = []
-        result = run_with_retry(
+        result = _retried(
             lambda: next(responses),
             config=RetryConfig(max_retries=3, fixed_delay=1.0),
             status_of=lambda r: r,
@@ -152,7 +159,7 @@ class TestRetry:
 
     def test_exhaustion_raises(self):
         with pytest.raises(HttpRetryError) as err:
-            run_with_retry(
+            _retried(
                 lambda: 503,
                 config=RetryConfig(max_retries=2),
                 status_of=lambda r: r,
@@ -170,7 +177,7 @@ class TestRetry:
                 raise OSError("boom")
             return 200
 
-        result = run_with_retry(
+        result = _retried(
             send,
             config=RetryConfig(max_retries=3),
             status_of=lambda r: r,
@@ -180,7 +187,7 @@ class TestRetry:
         assert result == 200 and attempts["n"] == 3
 
     def test_non_retriable_error_status_returned_not_raised(self):
-        result = run_with_retry(
+        result = _retried(
             lambda: 404,
             config=RetryConfig(max_retries=3),
             status_of=lambda r: r,
@@ -205,7 +212,7 @@ class TestRetry:
             return 503
 
         with pytest.raises(HttpRetryError):
-            run_with_retry(
+            _retried(
                 send,
                 config=RetryConfig(max_retries=0),
                 status_of=lambda r: r,
@@ -586,7 +593,7 @@ class TestRetryAfter:
     def test_hint_stretches_policy_delay(self):
         responses = iter([(429, 5.0), (429, None), (200, None)])
         sleeps = []
-        result = run_with_retry(
+        result = _retried(
             lambda: next(responses),
             config=RetryConfig(max_retries=3, fixed_delay=1.0),
             status_of=lambda r: r[0],
@@ -601,7 +608,7 @@ class TestRetryAfter:
     def test_hint_never_exceeds_backoff_cap(self):
         responses = iter([(503, 99999.0), (200, None)])
         sleeps = []
-        run_with_retry(
+        _retried(
             lambda: next(responses),
             config=RetryConfig(
                 max_retries=2, strategy="exponential-delay",
@@ -617,7 +624,7 @@ class TestRetryAfter:
     def test_hint_smaller_than_policy_keeps_policy(self):
         responses = iter([(429, 0.2), (200, None)])
         sleeps = []
-        run_with_retry(
+        _retried(
             lambda: next(responses),
             config=RetryConfig(max_retries=2, fixed_delay=1.0),
             status_of=lambda r: r[0],
@@ -756,7 +763,6 @@ class TestRetryBudget:
             HttpRetryError,
             RetryBudget,
             RetryConfig,
-            run_with_retry,
         )
 
         budget = RetryBudget(ratio=0.0, min_retries_per_second=0.0, burst=1.0)
@@ -767,7 +773,7 @@ class TestRetryBudget:
             return 503
 
         def run_once():
-            run_with_retry(
+            _retried(
                 send,
                 config=RetryConfig(max_retries=5, fixed_delay=0.0),
                 status_of=lambda r: r,

@@ -8,6 +8,7 @@ the lookup client and the sink writer.
 """
 
 import json
+import time
 
 import pytest
 
@@ -40,6 +41,20 @@ class FakeTimeline:
         return TokenBucket(rate, burst, clock=self.clock, sleep=self.sleep)
 
 
+class GrantCounter(TokenBucket):
+    """A real-clock bucket that counts the permits it grants. The lookup
+    client's loop waits for a permit on a timer (``try_acquire``), not
+    through the bucket's ``sleep``, so a fake clock would never advance."""
+
+    granted = 0
+
+    def try_acquire(self, permits=1.0):
+        wait = super().try_acquire(permits)
+        if not wait:
+            self.granted += 1
+        return wait
+
+
 class TestTokenBucket:
     def test_burst_spends_free_then_steady_rate(self):
         tl = FakeTimeline()
@@ -49,6 +64,17 @@ class TestTokenBucket:
         assert bucket.acquire() == pytest.approx(0.1)  # 1/rate per permit
         assert bucket.acquire() == pytest.approx(0.1)
         assert tl.sleeps == pytest.approx([0.1, 0.1])
+
+    def test_try_acquire_never_sleeps(self):
+        tl = FakeTimeline()
+        bucket = tl.bucket(rate=10, burst=1)
+        assert bucket.try_acquire() == 0.0
+        assert bucket.try_acquire() == pytest.approx(0.1)  # nothing taken
+        tl.t += 0.05
+        assert bucket.try_acquire() == pytest.approx(0.05)
+        tl.t += 0.05
+        assert bucket.try_acquire() == 0.0
+        assert tl.sleeps == []
 
     def test_refill_capped_at_burst(self):
         tl = FakeTimeline()
@@ -144,12 +170,15 @@ class TestClientWiring:
             options=HttpLookupOptions(method="GET", rate_limit=10, rate_limit_burst=1),
         )
         assert client.rate_limiter is not None
-        tl = FakeTimeline()
-        client.rate_limiter = tl.bucket(rate=10, burst=1)
+        client.rate_limiter = bucket = GrantCounter(rate=10, burst=1)
+        start = time.monotonic()
         for _ in range(3):
             result = client.pull({"n_nationkey": 1})
             assert result.rows
-        assert tl.sleeps == pytest.approx([0.1, 0.1])
+        # one permit per request; the loop waits for each on a timer, so
+        # three at 10/s with a burst of 1 take two waits of 0.1 s
+        assert bucket.granted == 3
+        assert time.monotonic() - start >= 0.199
 
     def test_lookup_client_unlimited_by_default(self, stub_server):
         stub_server.stub_json("/n", {"n_nationkey": 1})
@@ -176,12 +205,13 @@ class TestClientWiring:
                                   fixed_delay=0.0),
             ),
         )
-        tl = FakeTimeline()
-        client.rate_limiter = tl.bucket(rate=10, burst=1)
+        client.rate_limiter = bucket = GrantCounter(rate=10, burst=1)
+        start = time.monotonic()
         result = client.pull({"k": 1})
         assert result.rows == [{"ok": 1}]
         # three wire attempts (two 503s + success) → two throttled waits
-        assert tl.sleeps == pytest.approx([0.1, 0.1])
+        assert bucket.granted == 3
+        assert time.monotonic() - start >= 0.199
 
 
 class TestSinkWiring:

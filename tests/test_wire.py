@@ -3,8 +3,9 @@ against raw-socket servers that write exactly the bytes under test.
 
 Covers the body framings (Content-Length, chunked, close-delimited) and
 the no-body responses (204, 304, HEAD), a truncated body, a keep-alive
-socket the server closed while idle, a CONNECT-proxy round trip, and that
-an async per-key lookup batch runs on the calling thread alone.
+socket the server closed while idle, the loop's deadline against a hung
+endpoint and against rate-limiter waits, a CONNECT-proxy round trip, and
+that an async per-key lookup batch runs on the calling thread alone.
 """
 
 import gzip
@@ -16,7 +17,9 @@ import time
 import pandas as pd
 import pytest
 
-from flink_connector_http_spark.client import HttpTransport, send_with_retry
+from flink_connector_http_spark.client import (
+    HttpTransport, http_retry_steps, send_with_retry,
+)
 from flink_connector_http_spark.request import HttpRequestSpec
 from flink_connector_http_spark.retry import HttpRetryError, RetryConfig
 
@@ -218,6 +221,107 @@ def test_idle_socket_closed_by_server(raw_server, method, resent):
         with pytest.raises(ConnectionError):
             transport.send(_get(server.url(), method, body))
         assert server.accepted == 1 and len(server.requests) == 1
+
+
+def _hung(conn, server):
+    """Reads one request and never answers it."""
+    server.requests.append(read_request(conn))
+    read_request(conn)  # returns when the client closes the socket
+
+
+def test_deadline_counts_as_a_breaker_failure(raw_server):
+    """An exchange the loop closes unfinished at its deadline is a circuit
+    breaker failure: a hung endpoint trips the breaker, and a half-open
+    trial that times out re-opens it, so after ``reset_timeout`` the
+    next trial still reaches the wire."""
+    from flink_connector_http_spark import HttpLookupOptions
+    from flink_connector_http_spark.client import HttpPollingClient
+
+    server = raw_server(_hung)
+    client = HttpPollingClient(url=server.url("/k"), options=HttpLookupOptions(
+        circuit_breaker_failures=1, circuit_breaker_reset=0.2))
+    spec = _get(server.url("/k"))
+    try:
+        for trial in range(3):
+            (result,) = client.run(
+                [client.exchange_steps(spec)],
+                deadline=time.monotonic() + 0.3, on_timeout=lambda i: "timed out")
+            assert result == "timed out"
+            assert client.circuit_breaker.is_open
+            assert len(server.requests) == trial + 1
+            time.sleep(0.25)
+    finally:
+        client.close()
+
+
+def test_rate_limit_wait_keeps_the_deadline(raw_server):
+    """A limiter permit wait is a timer on the loop, not a sleep: at one
+    permit a second, eight exchanges in flight still end at the 0.5 s
+    deadline (the first answered, the rest timed out), and without a
+    deadline each waits for its permit in turn."""
+    from flink_connector_http_spark.ratelimit import TokenBucket
+
+    server = raw_server(serving([b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok"]))
+    transport = HttpTransport(timeout=5)
+    try:
+        start = time.monotonic()
+        results = transport.run(
+            [retry_steps_of(_get(server.url())) for _ in range(8)], width=8,
+            deadline=start + 0.5, on_timeout=lambda i: None,
+            limiter=TokenBucket(1.0))
+        assert time.monotonic() - start < 1.5
+        assert results[0].body == b"ok" and results[1:] == [None] * 7
+        assert len(server.requests) == 1
+
+        start = time.monotonic()
+        results = transport.run(
+            [retry_steps_of(_get(server.url())) for _ in range(4)], width=4,
+            limiter=TokenBucket(20.0, 1.0))
+        assert [r.body for r in results] == [b"ok"] * 4
+        assert time.monotonic() - start >= 0.14  # three permit waits of 50 ms
+    finally:
+        transport.close()
+
+
+def test_hedged_duplicate_takes_a_permit(raw_server):
+    """A hedge is one more wire attempt, so it takes one more permit; the
+    first socket is slow, the duplicate on a second socket wins."""
+    from flink_connector_http_spark.ratelimit import TokenBucket
+
+    granted = []
+
+    class Counting(TokenBucket):
+        def try_acquire(self, permits=1.0):
+            wait = super().try_acquire(permits)
+            granted.append(wait == 0.0)
+            return wait
+
+    def handle(conn, server):
+        request = read_request(conn)
+        server.requests.append(request)
+        if len(server.requests) == 1:
+            time.sleep(0.5)
+        conn.sendall(b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok")
+        read_request(conn)
+
+    server = raw_server(handle)
+    transport = HttpTransport(timeout=5)
+    stats = {"fired": 0, "won": 0}
+    try:
+        (response,) = transport.run(
+            [retry_steps_of(_get(server.url()))], limiter=Counting(1000.0),
+            hedge_delay=0.05, hedge_stats=stats)
+        assert response.body == b"ok"
+        assert granted == [True, True] and stats == {"fired": 1, "won": 1}
+        assert server.accepted == 2
+    finally:
+        transport.close()
+
+
+def retry_steps_of(spec):
+    """One exchange without retries, as a step sequence."""
+    return http_retry_steps(spec, config=RetryConfig(max_retries=0),
+                            is_retriable_status=lambda status: False)
 
 
 def test_threads_share_one_transport():
