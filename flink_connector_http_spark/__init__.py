@@ -13,6 +13,7 @@ Public surface:
   built on the same Spark-first substrate.
 """
 
+from . import _worker
 from .cache import LookupCacheConfig, LruTtlCache
 from .formats import register_format, registered_formats, resolve_decoder
 from .http_logger import HttpContentLogLevel, HttpContentLogger, logging_callback
@@ -59,3 +60,5 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+_worker.install()
