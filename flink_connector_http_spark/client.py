@@ -43,13 +43,12 @@ from .retry import (
     RetryStats,
     parse_retry_after,
     retry_steps,
-    run_steps,
 )
 from .status import HttpResponseChecker, parse_http_codes
 from .types import HttpCompletionState, HttpLookupResult
 from .wire import HttpResponse, HttpTransport, _decompress_response  # noqa: F401
 
-__all__ = ["HttpResponse", "HttpTransport", "HttpPollingClient", "send_with_retry"]
+__all__ = ["HttpResponse", "HttpTransport", "HttpPollingClient", "http_retry_steps"]
 
 logger = logging.getLogger(__name__)
 
@@ -81,9 +80,11 @@ def http_retry_steps(
     stats: Optional[RetryStats] = None,
     budget: Optional[RetryBudget] = None,
 ):
-    """``retry.retry_steps`` for one HTTP request: the transport's errors
-    and a retriable status are retried, after ``max(policy delay,
-    Retry-After)`` capped at the backoff ceiling."""
+    """``retry.retry_steps`` for one HTTP request: the retry path of every
+    exchange, run on the transport's loop (reference
+    ``HttpClientWithRetry.java:44-92``). The transport's errors and a
+    retriable status are retried, after ``max(policy delay, Retry-After)``
+    capped at the backoff ceiling."""
     return retry_steps(
         spec,
         config=config,
@@ -93,40 +94,6 @@ def http_retry_steps(
         stats=stats,
         retry_after_of=_retry_after_hint,
         budget=budget,
-    )
-
-
-def send_with_retry(
-    send: Callable[[HttpRequestSpec], HttpResponse],
-    spec: HttpRequestSpec,
-    *,
-    config: RetryConfig,
-    is_retriable_status: Callable[[int], bool],
-    limiter: Optional[TokenBucket] = None,
-    stats: Optional[RetryStats] = None,
-    budget: Optional[RetryBudget] = None,
-) -> HttpResponse:
-    """Send ``spec`` through ``send`` under :func:`http_retry_steps`, blocking:
-    the retry path of the sink, the ``http`` source and ``http_get_json``
-    (reference ``HttpClientWithRetry.java:44-92``). The lookup client runs
-    the same steps on its transport's loop (:meth:`HttpPollingClient.run`).
-
-    Each wire attempt, retries included, takes one ``limiter`` permit.
-    ``OSError`` and ``http.client.HTTPException`` (BadStatusLine, a corrupt
-    compressed body) are retried, as is a status ``is_retriable_status``
-    accepts, after ``max(policy delay, Retry-After)`` capped at the
-    backoff ceiling. Returns the first other response; raises
-    :class:`HttpRetryError` when the attempts or the ``budget`` run out."""
-
-    def attempt(spec: HttpRequestSpec) -> HttpResponse:
-        if limiter is not None:
-            limiter.acquire()
-        return send(spec)
-
-    return run_steps(
-        http_retry_steps(spec, config=config, is_retriable_status=is_retriable_status,
-                         stats=stats, budget=budget),
-        attempt,
     )
 
 

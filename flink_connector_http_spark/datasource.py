@@ -41,6 +41,7 @@ bounded in-flight pool; nothing funnels through the driver.
 from __future__ import annotations
 
 import json
+import math
 import re
 from typing import Any, Dict, Iterator, List, Optional, Sequence, Tuple
 from urllib.parse import urlencode
@@ -139,20 +140,18 @@ def _get(transport, url: str, headers: Dict[str, str], what: str,
     a failed Spark task. A final status outside ``ok`` raises
     ``_StatusMiss`` (an ``IOError``) naming ``what``; an exhausted
     transport error re-raises its cause."""
-    from .client import send_with_retry
+    from .client import http_retry_steps
     from .request import HttpRequestSpec
     from .retry import HttpRetryError, RetryConfig
     from .status import HttpResponseChecker
 
     spec = HttpRequestSpec(method="GET", url=url, headers=headers, body=None)
     try:
-        resp = send_with_retry(
-            transport.send,
+        resp = transport.run([http_retry_steps(
             spec,
             config=RetryConfig(),
             is_retriable_status=HttpResponseChecker().is_temporal_error,
-            limiter=limiter,
-        )
+        )], limiter=limiter)[0]
     except HttpRetryError as err:
         if err.cause is not None:
             raise err.cause
@@ -614,6 +613,26 @@ def _sink_options(options: Dict[str, str]) -> "HttpSinkOptions":
     return HttpSinkOptions(**kw)
 
 
+def _json_row(row: Dict[str, Any]) -> str:
+    """One row as RFC 8259 JSON. A NaN or infinite float goes out as the
+    string ``"NaN"``, ``"Infinity"`` or ``"-Infinity"``, as Spark's
+    ``to_json`` writes it; rows without one take the plain ``json.dumps``."""
+    try:
+        return json.dumps(row, default=str, separators=(",", ":"), allow_nan=False)
+    except ValueError:
+        return json.dumps(_finite(row), default=str, separators=(",", ":"))
+
+
+def _finite(value):
+    if isinstance(value, float) and not math.isfinite(value):
+        return "NaN" if value != value else "Infinity" if value > 0 else "-Infinity"
+    if isinstance(value, dict):
+        return {k: _finite(v) for k, v in value.items()}
+    if isinstance(value, (list, tuple)):
+        return [_finite(v) for v in value]
+    return value
+
+
 class HttpBatchWriter(DataSourceWriter):
     """One ``HttpSinkWriter`` per partition task (reference:
     one-writer-per-subtask, ``sink/HttpSinkInternal.java:134-185``)."""
@@ -632,9 +651,7 @@ class HttpBatchWriter(DataSourceWriter):
         n = 0
         try:
             for row in iterator:
-                payload = json.dumps(
-                    row.asDict(recursive=True), default=str, separators=(",", ":")
-                )
+                payload = _json_row(row.asDict(recursive=True))
                 writer.write(
                     HttpSinkRequestEntry(
                         method=opts.insert_method, payload=payload.encode("utf-8")

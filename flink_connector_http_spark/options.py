@@ -350,6 +350,9 @@ class HttpSinkOptions:
     max_time_in_buffer: float = 5.0                   # seconds
     max_record_bytes: int = 1024 * 1024
     request_timeout: float = 30.0
+    # http.sink.writer.thread-pool.size: requests on the wire at once per
+    # writer (the key keeps the reference's name; no thread is started —
+    # the writer's non-blocking socket loop drives them, see sink.py)
     writer_pool_size: int = 4
     error_codes: str = ""                             # empty -> 4XX,5XX default
     error_codes_exclude: str = ""

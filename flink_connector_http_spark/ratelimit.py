@@ -10,13 +10,13 @@ required scale addition; this module provides it for both the lookup
 client and the sink writer.
 
 Semantics: a token bucket holding at most ``burst`` permits, refilled at
-``rate`` permits/second. :meth:`TokenBucket.acquire` blocks the calling
-worker thread until a permit is available, so backpressure propagates
-naturally — into the ``mapInPandas`` batch on the lookup side and into
-the writer pool on the sink side — instead of queueing unbounded work.
-The lookup's loop uses :meth:`TokenBucket.try_acquire` instead and turns
-the wait into a timer, so a permit wait never blocks the loop past its
-``async_timeout`` deadline.
+``rate`` permits/second. The transport's loop (``wire.HttpTransport.loop``)
+takes a permit for each wire attempt with :meth:`TokenBucket.try_acquire`
+and turns the wait for one into a timer, so a permit wait never blocks the
+loop past the lookup's ``async_timeout`` deadline, and backpressure
+propagates naturally — into the ``mapInPandas`` batch on the lookup side
+and through ``max_inflight`` into ``write`` on the sink side — instead of
+queueing unbounded work.
 
 The bound is **per task**: a job running N concurrent tasks against the
 same endpoint issues at most ``N × rate`` requests/second, so size
@@ -27,8 +27,8 @@ permit — strictly worse than the thing it throttles. Per-task division
 is the standard distributed-client design (same stance as the
 reference's per-subtask pools and caches).
 
-The clock and sleep are injectable so tests run on a fake clock with
-zero wall-time (same pattern as the sink age-flush tests).
+The clock is injectable so tests run on a fake clock with zero wall-time
+(same pattern as the sink age-flush tests).
 """
 
 from __future__ import annotations
@@ -54,7 +54,6 @@ class TokenBucket:
         burst: float | None = None,
         *,
         clock: Callable[[], float] = time.monotonic,
-        sleep: Callable[[float], None] = time.sleep,
     ) -> None:
         if rate <= 0:
             raise ValueError("rate-limit must be positive (omit it to disable)")
@@ -66,7 +65,6 @@ class TokenBucket:
         self._last: float | None = None  # lazy: idle init must not pre-fill
         self._lock = threading.Lock()
         self._clock = clock
-        self._sleep = sleep
 
     def try_acquire(self, permits: float = 1.0) -> float:
         """Take ``permits`` tokens when they are available and return 0.0;
@@ -88,16 +86,3 @@ class TokenBucket:
                 self._tokens = max(0.0, self._tokens - permits)
                 return 0.0
             return (permits - self._tokens) / self.rate
-
-    def acquire(self, permits: float = 1.0) -> float:
-        """Block until ``permits`` tokens are available; returns the total
-        time slept (0.0 when the bucket had headroom)."""
-        slept = 0.0
-        while True:
-            wait = self.try_acquire(permits)
-            if not wait:
-                return slept
-            # sleep outside the lock so concurrent workers refill/compete
-            # fairly; re-check on wake (another thread may have drained it)
-            self._sleep(wait)
-            slept += wait

@@ -1,5 +1,8 @@
 """Retry policies for every HTTP request (lookup, sink, source reads, UDTF).
 
+The policy is a step sequence (:func:`retry_steps`) with one driver, the
+transport's loop (``wire.HttpTransport.loop``): each wait is a timer on it.
+
 Parity targets:
 - strategies ``fixed-delay`` (default, 1s) and ``exponential-delay``
   (initial 1s, multiplier 1.5, cap 60s): reference
@@ -39,7 +42,7 @@ from dataclasses import dataclass
 from typing import Any, Callable, Generator, Iterator, Optional, TypeVar
 
 __all__ = [
-    "RetryConfig", "HttpRetryError", "retry_steps", "run_steps", "RetryStats",
+    "RetryConfig", "HttpRetryError", "retry_steps", "RetryStats",
     "CircuitBreaker", "RetryBudget", "parse_retry_after",
 ]
 
@@ -205,9 +208,9 @@ def retry_steps(
 ) -> Generator[Any, Any, T]:
     """The retry policy as a step sequence: a generator that yields
     ``request`` for each of up to ``max_retries + 1`` wire attempts and a
-    ``float`` for each wait between them. Its driver sends each attempt's
-    response back in, or throws the attempt's exception in: a blocking one
-    (:func:`run_steps`) or the transport's loop (``wire.HttpTransport.run``).
+    ``float`` for each wait between them. Its driver, the transport's loop
+    (``wire.HttpTransport.loop``), sends each attempt's response back in,
+    or throws the attempt's exception in, and turns each wait into a timer.
 
     An attempt is retried when it raises one of ``retriable_exceptions`` or
     its response status is retriable; any other exception propagates.
@@ -270,35 +273,6 @@ def retry_steps(
         status_code=last_status,
         cause=last_exc,
     )
-
-
-def run_steps(
-    steps: Generator,
-    attempt: Callable[[Any], Any],
-    sleep: Optional[Callable[[float], None]] = None,
-):
-    """Drive a step sequence (see :func:`retry_steps`) on the calling
-    thread: ``attempt(step)`` for each wire attempt, ``sleep(seconds)``
-    for each wait. ``sleep`` defaults to ``time.sleep`` looked up at call
-    time, so a test that patches ``time.sleep`` sees every retry sleep.
-    Returns the sequence's result."""
-    if sleep is None:
-        sleep = time.sleep
-    value: Any = None
-    error: Optional[Exception] = None
-    while True:
-        try:
-            step = steps.send(value) if error is None else steps.throw(error)
-        except StopIteration as stop:
-            return stop.value
-        value = error = None
-        if type(step) is float:
-            sleep(step)
-            continue
-        try:
-            value = attempt(step)
-        except Exception as exc:  # noqa: BLE001 — the sequence classifies it
-            error = exc
 
 
 class CircuitBreaker:

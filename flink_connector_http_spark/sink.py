@@ -29,15 +29,13 @@ from __future__ import annotations
 
 import threading
 import time
-from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
-from dataclasses import dataclass
-from typing import Callable, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Callable, Iterable, Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .auth import AUTHORIZATION, basic_auth_value, preprocess_headers
-from .client import send_with_retry
+from .client import HttpTransport, http_retry_steps
 from .options import HttpSinkOptions
 from .ratelimit import TokenBucket
 from .request import HttpRequestSpec
@@ -55,18 +53,21 @@ __all__ = [
 
 
 class HttpSinkWriter:
-    """Buffers entries, frames batches, submits them concurrently.
+    """Buffers entries, frames batches, sends them on one loop.
 
     One writer per partition task (the reference creates one per subtask,
-    ``sink/HttpSinkInternal.java:134-185``). ``write`` is single-caller,
-    but the buffer is lock-protected because the age-flush ticker drains
-    it from a daemon thread. Submission fan-out happens on an internal
-    pool bounded by ``max_inflight``; total unacknowledged records are
-    bounded by ``max_buffered`` (``write`` blocks past the cap —
+    ``sink/HttpSinkInternal.java:134-185``). Each framed request is a step
+    sequence on the writer's loop over its transport
+    (``wire.HttpTransport.loop``): up to ``writer_pool_size`` requests are
+    on the wire at once, and ``_submit`` drives the loop while
+    ``max_inflight`` are outstanding. Total unacknowledged records are
+    bounded by ``max_buffered`` (``write`` drives the loop past the cap —
     reference ``sink.requests.max-buffered``, ``HttpSinkBuilder.java:74``).
     A partial buffer older than ``max_time_in_buffer`` seconds is flushed
-    even if no further writes arrive (``sink.flush-buffer.timeout``,
-    ``HttpSinkBuilder.java:78``).
+    even if no further writes arrive, by a daemon ticker
+    (``sink.flush-buffer.timeout``, ``HttpSinkBuilder.java:78``). The
+    writer's lock serializes ``write`` and the ticker: only the thread
+    that holds it drives the loop.
     """
 
     def __init__(
@@ -80,8 +81,6 @@ class HttpSinkWriter:
         age_ticker: bool = True,
         framing: Optional[str] = None,
     ) -> None:
-        from .client import HttpTransport  # local import to keep pickling light
-
         self.url = url
         self.options = options
         self.checker = SinkErrorCodeChecker(options.error_codes, options.error_codes_exclude)
@@ -98,8 +97,8 @@ class HttpSinkWriter:
         # `http.sink.request-callback` identifier, resolved to a callable
         # by sink_options_from_map — reference R12 string-identifier SPI)
         self.on_response = on_response or options.request_callback
-        # per-task request rate cap (SURVEY §7 scale addition): acquired
-        # by the pool workers in _send_one, so a throttled endpoint
+        # per-task request rate cap (SURVEY §7 scale addition): the loop
+        # takes a permit for each wire attempt, so a throttled endpoint
         # backpressures through max_inflight into write()
         self.rate_limiter = (
             TokenBucket(options.rate_limit, options.rate_limit_burst)
@@ -128,13 +127,14 @@ class HttpSinkWriter:
 
         self._buffer: List[HttpSinkRequestEntry] = []
         self._buffer_bytes = 0
-        self._pool = ThreadPoolExecutor(max_workers=max(1, options.writer_pool_size))
-        self._pending: Dict[Future, int] = {}   # future -> record_count
+        self._loop = self.transport.loop(
+            width=options.writer_pool_size, limiter=self.rate_limiter)
         self._inflight_records = 0
-        self._lock = threading.Lock()
+        self._lock = threading.RLock()
         self._clock = clock
         self._oldest_ts: Optional[float] = None
         self._closed = threading.Event()
+        self._ticker_error: Optional[Exception] = None
         self.records_sent = 0
         self.send_errors = 0          # numRecordsSendErrors parity
         self.requests_sent = 0
@@ -147,7 +147,7 @@ class HttpSinkWriter:
             max_backoff=options.retry_max_backoff,
         )
         # opt-in Finagle-style retry budget (see retry.RetryBudget):
-        # shared by all pool workers of this writer task
+        # shared by all requests of this writer task
         if options.retry_budget_ratio is not None:
             self.retry_budget = RetryBudget(
                 ratio=options.retry_budget_ratio,
@@ -158,12 +158,9 @@ class HttpSinkWriter:
         # daemon ticker so a quiet writer still honors the age deadline;
         # tests inject a fake clock and call _flush_if_aged() directly
         if age_ticker and options.max_time_in_buffer > 0:
-            self._ticker = threading.Thread(
+            threading.Thread(
                 target=self._age_loop, name="http-sink-age-flush", daemon=True
-            )
-            self._ticker.start()
-        else:
-            self._ticker = None
+            ).start()
 
     # -- buffering -------------------------------------------------------------
 
@@ -173,26 +170,21 @@ class HttpSinkWriter:
                 f"record of {entry.size_in_bytes} bytes exceeds the "
                 f"{self.options.max_record_bytes}-byte record limit"
             )
-        # backpressure: block while buffered + unacknowledged records sit at
-        # the cap. In this writer flush() frames and submits synchronously,
-        # so the reference's "buffered request entries" backlog manifests as
-        # in-flight records — the bound covers both.
-        while True:
-            with self._lock:
-                outstanding = len(self._buffer) + self._inflight_records
-                has_pending = bool(self._pending)
-            if outstanding < self.options.max_buffered:
-                break
-            if has_pending:
-                self._drain_one()
-            else:
-                self.flush()
+        # backpressure: drive the loop while buffered + unacknowledged
+        # records sit at the cap. flush() frames and submits synchronously,
+        # so the reference's "buffered request entries" backlog manifests
+        # as in-flight records — the bound covers both.
         with self._lock:
+            while len(self._buffer) + self._inflight_records >= self.options.max_buffered:
+                if self._loop.pending:
+                    self._drain_one()
+                else:
+                    self.flush()
             self._buffer.append(entry)
             self._buffer_bytes += entry.size_in_bytes
             if self._oldest_ts is None:
                 self._oldest_ts = self._clock()
-            should_flush = (
+            if (
                 len(self._buffer) >= self.options.flush_batch_size
                 or self._buffer_bytes >= self.options.max_batch_bytes
                 or (
@@ -200,26 +192,35 @@ class HttpSinkWriter:
                     and self._clock() - self._oldest_ts
                     >= self.options.max_time_in_buffer
                 )
-            )
-        if should_flush:
-            self.flush()
+            ):
+                self.flush()
 
     def _age_loop(self) -> None:
+        """Each tick flushes an aged buffer and moves the requests on, so
+        they progress while no rows arrive. A failure stops the ticker and
+        is raised by ``close``."""
         interval = max(0.05, self.options.max_time_in_buffer / 4)
         while not self._closed.wait(interval):
-            self._flush_if_aged()
+            with self._lock:
+                if self._closed.is_set():  # close() has drained the loop
+                    return
+                try:
+                    self._flush_if_aged()
+                    self._loop.turn(block=False)
+                except Exception as exc:  # noqa: BLE001 — raised by close()
+                    self._ticker_error = exc
+                    return
 
     def _flush_if_aged(self) -> None:
         """Flush a partial buffer whose oldest entry hit the age deadline."""
         with self._lock:
-            aged = (
+            if (
                 self._oldest_ts is not None
                 and self.options.max_time_in_buffer > 0
                 and self._clock() - self._oldest_ts
                 >= self.options.max_time_in_buffer
-            )
-        if aged:
-            self.flush()
+            ):
+                self.flush()
 
     def flush(self) -> None:
         """Drain the buffer into one or more HTTP requests."""
@@ -228,28 +229,29 @@ class HttpSinkWriter:
                 return
             entries, self._buffer, self._buffer_bytes = self._buffer, [], 0
             self._oldest_ts = None
-        if self.options.request_mode == "single":
+            if self.options.request_mode == "single":
+                for entry in entries:
+                    self._submit(entry.method, entry.payload,
+                                 payloads=(entry.payload,))
+                return
+            # batch mode: JSON-array framing, split on method change
+            # (reference BatchRequestSubmitter.java:68-93) and on
+            # batch_size/bytes bounds.
+            group: List[HttpSinkRequestEntry] = []
+            group_bytes = 0
             for entry in entries:
-                self._submit(entry.method, entry.payload,
-                             payloads=(entry.payload,))
-            return
-        # batch mode: JSON-array framing, split on method change (reference
-        # BatchRequestSubmitter.java:68-93) and on batch_size/bytes bounds.
-        group: List[HttpSinkRequestEntry] = []
-        group_bytes = 0
-        for entry in entries:
-            method_changed = group and group[0].method != entry.method
-            full = (
-                len(group) >= self.options.batch_size
-                or group_bytes + entry.size_in_bytes > self.options.max_batch_bytes
-            )
-            if method_changed or (full and group):
+                method_changed = group and group[0].method != entry.method
+                full = (
+                    len(group) >= self.options.batch_size
+                    or group_bytes + entry.size_in_bytes > self.options.max_batch_bytes
+                )
+                if method_changed or (full and group):
+                    self._submit_batch(group)
+                    group, group_bytes = [], 0
+                group.append(entry)
+                group_bytes += entry.size_in_bytes
+            if group:
                 self._submit_batch(group)
-                group, group_bytes = [], 0
-            group.append(entry)
-            group_bytes += entry.size_in_bytes
-        if group:
-            self._submit_batch(group)
 
     def _submit_batch(self, group: List[HttpSinkRequestEntry]) -> None:
         if self._framing == "json-array":
@@ -261,22 +263,11 @@ class HttpSinkWriter:
         self._submit(group[0].method, body, record_count=len(group),
                      payloads=tuple(e.payload for e in group))
 
-    # -- bounded-in-flight submission -------------------------------------------
+    # -- requests on the loop (the caller holds the lock) ----------------------
 
     def _drain_one(self) -> None:
-        """Wait for at least one in-flight request to complete."""
-        with self._lock:
-            pending = set(self._pending)
-        if not pending:
-            return
-        done, _ = wait(pending, return_when=FIRST_COMPLETED)
-        with self._lock:
-            for fut in done:
-                n = self._pending.pop(fut, None)
-                if n is not None:
-                    self._inflight_records -= n
-        for fut in done:
-            fut.result()  # propagate transport-level failures
+        """Drive the loop until one request finishes."""
+        self._loop.turn()
 
     def _submit(
         self,
@@ -285,11 +276,7 @@ class HttpSinkWriter:
         record_count: int = 1,
         payloads: Optional[Tuple[bytes, ...]] = None,
     ) -> None:
-        while True:
-            with self._lock:
-                n_pending = len(self._pending)
-            if n_pending < self.options.max_inflight:
-                break
+        while self._loop.pending >= self.options.max_inflight:
             self._drain_one()
         headers = self.headers
         if self.options.gzip_request_body and body:
@@ -298,22 +285,21 @@ class HttpSinkWriter:
             body = _gzip.compress(body, compresslevel=6)
             headers = {**dict(headers), "Content-Encoding": "gzip"}
         spec = HttpRequestSpec(method=method, url=self.url, headers=headers, body=body)
-        future = self._pool.submit(self._send_one, spec, record_count, payloads)
-        with self._lock:
-            self._pending[future] = record_count
-            self._inflight_records += record_count
+        self._inflight_records += record_count
+        self._loop.add(self._request_steps(spec, record_count, payloads))
+        self._loop.turn(block=False)
 
-    def _send_one(
+    def _request_steps(
         self,
         spec: HttpRequestSpec,
         record_count: int,
         payloads: Optional[Tuple[bytes, ...]] = None,
-    ) -> None:
-        """Send one framed request through ``client.send_with_retry``.
+    ):
+        """The step sequence of one framed request: ``client.http_retry_steps``.
 
         An error-classified status or a transport error is retried
         ``sink.max-retries`` times (default 0: counted, never retried —
-        reference parity, ``HttpSinkWriter.java:114,129-135``), sleeping
+        reference parity, ``HttpSinkWriter.java:114,129-135``), waiting
         ``sink.retry-delay`` × ``sink.retry-backoff-multiplier``^(k-1)
         before retry k, stretched to a Retry-After hint and capped at
         ``sink.retry-max-backoff``. When the retries or the retry budget
@@ -322,17 +308,14 @@ class HttpSinkWriter:
         written as a dead letter (the wire ``spec.body`` may be framed or
         gzipped). At-least-once either way."""
         try:
-            send_with_retry(
-                self._send_attempt,
+            yield from self._observed(http_retry_steps(
                 spec,
                 config=self._retry,
                 is_retriable_status=self.checker.is_error,
-                limiter=self.rate_limiter,
                 budget=self.retry_budget,
-            )
+            ))
         except HttpRetryError as err:
-            with self._lock:
-                self.send_errors += record_count
+            self.send_errors += record_count
             if self.options.dead_letter_path and payloads:
                 cause = err.cause
                 error = (
@@ -342,19 +325,30 @@ class HttpSinkWriter:
                 self._write_dead_letters(
                     spec.method, payloads, err.status_code, error
                 )
-            return
-        with self._lock:
+        else:
             self.records_sent += record_count
+        finally:
+            self._inflight_records -= record_count
 
-    def _send_attempt(self, spec: HttpRequestSpec):
-        """One wire attempt: every response, retried or not, fires the
-        R12 callback and counts as a sent request."""
-        response = self.transport.send(spec)
-        if self.on_response is not None:
-            self.on_response(spec, response)
-        with self._lock:
-            self.requests_sent += 1
-        return response
+    def _observed(self, steps):
+        """Pass ``steps`` on to the loop. Every wire response, retried or
+        not, fires the R12 callback and counts as a sent request; an error
+        the callback raises goes back into ``steps`` as the attempt's."""
+        value = err = None
+        while True:
+            try:
+                step = steps.send(value) if err is None else steps.throw(err)
+            except StopIteration as stop:
+                return stop.value
+            value = err = None
+            try:
+                value = yield step
+                if type(step) is not float:
+                    if self.on_response is not None:
+                        self.on_response(step, value)
+                    self.requests_sent += 1
+            except Exception as exc:  # noqa: BLE001 — the steps classify it
+                err = exc
 
     def _write_dead_letters(
         self,
@@ -393,26 +387,19 @@ class HttpSinkWriter:
         with open(tmp, "w", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")
         os.replace(tmp, os.path.join(path, name))
-        with self._lock:
-            self.dead_letters_written += len(payloads)
+        self.dead_letters_written += len(payloads)
 
     def close(self) -> None:
+        """Flush, then drive the loop until every request is done."""
         self._closed.set()
-        self.flush()
-        while True:
-            with self._lock:
-                pending = set(self._pending)
-            if not pending:
-                break
-            done, _ = wait(pending)
-            with self._lock:
-                for fut in done:
-                    n = self._pending.pop(fut, None)
-                    if n is not None:
-                        self._inflight_records -= n
-            for fut in done:
-                fut.result()
-        self._pool.shutdown(wait=True)
+        with self._lock:
+            try:
+                self.flush()
+                self._loop.drain()
+            finally:
+                self._loop.close()
+        if self._ticker_error is not None:
+            raise self._ticker_error
 
 
 # --- DataFrame-level API ---------------------------------------------------------

@@ -1,23 +1,25 @@
 """HTTP/1.1 over non-blocking keep-alive sockets: the engine's one transport.
 
-Every HTTP exchange of the engine runs through :meth:`HttpTransport.run`.
+Every HTTP exchange of the engine runs on the transport's loop
+(:meth:`HttpTransport.loop`, or :meth:`HttpTransport.run` for a fixed set).
 It drives *step sequences* on the calling thread, over one selector: a step
 sequence is a generator that yields an :class:`HttpRequestSpec` for each
 wire attempt (the loop sends the attempt's response back in, or throws its
 exception in) and a ``float`` for each wait, which becomes a timer. Its
 return value is the sequence's result. ``retry.retry_steps`` is the retry
 policy written this way; the lookup client wraps it with the circuit
-breaker (``client.HttpPollingClient.exchange_steps``). Up to ``width``
-sequences run at once, so one Python thread keeps many exchanges in flight
-without a thread pool: the reference fans out over Java threads
-(``AsyncHttpTableLookupFunction.java:94-115``), which under the GIL would
-only take turns.
+breaker (``client.HttpPollingClient.exchange_steps``), and the sink writer
+adds one sequence per framed request to a loop that lives as long as the
+writer. Up to ``width`` sequences run at once, so one Python thread keeps
+many exchanges in flight without a thread pool: the reference fans out
+over Java threads (``AsyncHttpTableLookupFunction.java:94-115``), which
+under the GIL would only take turns.
 
 The framing follows ``testing.FastHttpStub``, written by hand: requests
 carry ``Content-Length``; responses may be ``Content-Length``, chunked or
 close-delimited, and HEAD, 1xx, 204 and 304 responses have no body. The
-transport keeps its idle sockets per endpoint (thread-safe, so the sink's
-writer threads share one transport). TLS runs on a non-blocking
+transport keeps its idle sockets per endpoint (thread-safe, so threads
+that share a lookup client share one transport). TLS runs on a non-blocking
 ``SSLSocket``; a proxy is spoken to directly: absolute-form requests for
 http targets, a CONNECT tunnel for https ones, each with a preemptive
 ``Proxy-Authorization`` when credentials are set
@@ -36,6 +38,7 @@ from __future__ import annotations
 
 import base64
 import errno
+import functools
 import heapq
 import http.client
 import itertools
@@ -46,6 +49,7 @@ import ssl
 import threading
 import time
 import weakref
+from collections import deque
 from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 from .request import HttpRequestSpec
@@ -354,7 +358,8 @@ class HttpTransport:
         hedge_stats: Optional[Dict[str, int]] = None,
     ) -> List:
         """Run the step ``sequences`` on the calling thread, up to ``width``
-        at once, and return their results in order.
+        at once, and return their results in order: a :meth:`loop` that
+        gets them all, then drains.
 
         Each wire attempt first takes one ``limiter`` permit. With
         ``hedge_delay`` set, an attempt that has not answered within it
@@ -367,11 +372,24 @@ class HttpTransport:
         gens = list(sequences)
         if not gens:
             return []
-        loop = _Loop(self, limiter, hedge_delay, hedge_stats)
+        results = [_PENDING] * len(gens)
+        loop = self.loop(width=width, limiter=limiter, hedge_delay=hedge_delay,
+                         hedge_stats=hedge_stats)
         try:
-            return loop.run(gens, max(1, width), deadline, on_timeout)
+            for i, gen in enumerate(gens):
+                loop.add(gen, functools.partial(results.__setitem__, i))
+            loop.drain(deadline)
         finally:
-            loop.close(gens)
+            loop.close()  # past the deadline: closes what has not finished
+        return [on_timeout(i) if r is _PENDING else r for i, r in enumerate(results)]
+
+    def loop(self, *, width: int = 1, limiter=None, hedge_delay: Optional[float] = None,
+             hedge_stats: Optional[Dict[str, int]] = None) -> "_Loop":
+        """A loop over this transport that outlives one call: ``add`` step
+        sequences to it as they come, ``turn`` or ``drain`` it, then
+        ``close`` it. The options are those of :meth:`run`. One thread at a
+        time may use it."""
+        return _Loop(self, width, limiter, hedge_delay, hedge_stats)
 
     def close(self) -> None:
         """Close the idle keep-alive sockets. Idempotent; the transport
@@ -562,13 +580,14 @@ _NEVER = float("inf")
 
 
 class _Seq:
-    """A running step sequence and the wire attempts of its current step."""
+    """A step sequence, what to call with its result, and the wire
+    attempts of its current step."""
 
-    __slots__ = ("index", "gen", "request", "attempt", "wires")
+    __slots__ = ("gen", "done", "request", "attempt", "wires")
 
-    def __init__(self, index: int, gen) -> None:
-        self.index = index
+    def __init__(self, gen, done) -> None:
         self.gen = gen
+        self.done = done
         self.request: Optional[_Request] = None
         self.attempt = 0
         self.wires: List[_Wire] = []
@@ -593,8 +612,14 @@ class _Wire:
 
 
 class _Loop:
-    def __init__(self, transport: HttpTransport, limiter, hedge_delay, hedge_stats) -> None:
+    """Step sequences over one selector, driven by whoever calls ``turn``
+    or ``drain``: ``add`` queues a sequence, and up to ``width`` run at
+    once, in the order they were added."""
+
+    def __init__(self, transport: HttpTransport, width: int, limiter, hedge_delay,
+                 hedge_stats) -> None:
         self.transport = transport
+        self.width = max(1, width)
         self.limiter = limiter
         self.hedge_delay = hedge_delay
         self.hedge_stats = hedge_stats
@@ -602,54 +627,87 @@ class _Loop:
         self.timers: list = []  # heap of (due, tie, callback, seq, token)
         self.tie = itertools.count()
         self.wires: set = set()
-        self.results: list = []
-        self.running = 0
+        self.waiting: deque = deque()  # added, not started yet
+        self.active: set = set()       # started, not finished
 
-    def run(self, gens: list, width: int, deadline, on_timeout) -> list:
-        n = len(gens)
-        self.results = results = [_PENDING] * n
-        started = 0
-        timers, wires, select = self.timers, self.wires, self.selector.select
-        while True:
-            while self.running < width and started < n:
-                self.running += 1
-                self._advance(_Seq(started, gens[started]), None, None)
-                started += 1
-            if not self.running and started == n:
-                return results
+    @property
+    def pending(self) -> int:
+        """Sequences added and not finished yet."""
+        return len(self.active) + len(self.waiting)
+
+    def add(self, gen, done: Optional[Callable[[object], object]] = None) -> None:
+        """Queue the step sequence ``gen``, and start it when a slot is free;
+        ``done(result)`` is called when it returns."""
+        self.waiting.append(_Seq(gen, done))
+        self._fill()
+
+    def turn(self, block: bool = True) -> None:
+        """Move the sequences on: one pass that waits for nothing, or, with
+        ``block``, passes until a sequence finishes."""
+        if not block:
+            self._pass(None, block=False)
+            return
+        pending = self.pending  # a turn adds nothing
+        while pending and self.pending == pending:
+            self._pass(None)
+
+    def drain(self, deadline: Optional[float] = None) -> bool:
+        """Turn until every sequence is done; False when ``deadline``
+        (``time.monotonic()``) came first."""
+        while self.pending:
+            if not self._pass(deadline):
+                return False
+        return True
+
+    def close(self) -> None:
+        """Close every wire in flight and every sequence not done yet."""
+        for wire in list(self.wires):
+            self._discard(wire)
+        seqs, self.active, self.waiting = [*self.active, *self.waiting], set(), deque()
+        for seq in seqs:
+            seq.gen.close()
+        self.selector.close()
+
+    def _fill(self) -> None:
+        while len(self.active) < self.width and self.waiting:
+            seq = self.waiting.popleft()
+            self.active.add(seq)
+            self._advance(seq, None, None)
+
+    def _pass(self, deadline, block: bool = True) -> bool:
+        """Wait for the first ready socket, timer, wire deadline or
+        ``deadline`` (not at all unless ``block``); resume the ready
+        sockets, then fire the due timers, then fail the overdue wires (a
+        response that landed while nobody turned the loop is read, not
+        timed out). False once ``deadline`` has passed."""
+        self._fill()
+        if not self.active:
+            return True
+        timers = self.timers
+        wait = 0.0
+        if block:
             due = _NEVER if deadline is None else deadline
             if timers and timers[0][0] < due:
                 due = timers[0][0]
-            for wire in wires:
+            for wire in self.wires:
                 if wire.due < due:
                     due = wire.due
-            now = time.monotonic()
-            for key, _mask in select(None if due == _NEVER else max(0.0, due - now)):
-                if key.data.io is not None:  # not closed earlier in this batch
-                    self._resume(key.data)
-            now = time.monotonic()
-            while timers and timers[0][0] <= now:
-                _due, _tie, callback, seq, token = heapq.heappop(timers)
-                callback(seq, token)
-            for wire in [w for w in wires if w.due <= now]:
-                if wire.io is not None:
-                    self._discard(wire)
-                    self._wire_failed(wire, TimeoutError("timed out"))
-            if deadline is not None and now >= deadline:
-                for wire in list(wires):
-                    self._discard(wire)
-                for i in range(n):
-                    if results[i] is _PENDING:
-                        gens[i].close()
-                        results[i] = on_timeout(i)
-                return results
-
-    def close(self, gens: list) -> None:
-        for wire in list(self.wires):
-            self._discard(wire)
-        for gen in gens:
-            gen.close()
-        self.selector.close()
+            wait = None if due == _NEVER else max(0.0, due - time.monotonic())
+        for key, _mask in self.selector.select(wait):
+            if key.data.io is not None:  # not closed earlier in this batch
+                self._resume(key.data)
+        now = time.monotonic()
+        while timers and timers[0][0] <= now:
+            _due, _tie, callback, seq, token = heapq.heappop(timers)
+            callback(seq, token)
+        for wire in [w for w in self.wires if w.due <= now]:
+            if wire.io is not None:
+                self._discard(wire)
+                self._wire_failed(wire, TimeoutError("timed out"))
+        if deadline is not None and now >= deadline:
+            return False
+        self._fill()
+        return True
 
     # -- sequences -----------------------------------------------------------------
 
@@ -657,9 +715,13 @@ class _Loop:
         try:
             step = seq.gen.send(value) if exc is None else seq.gen.throw(exc)
         except StopIteration as stop:
-            self.results[seq.index] = stop.value
-            self.running -= 1
+            self.active.discard(seq)
+            if seq.done is not None:
+                seq.done(stop.value)
             return
+        except BaseException:
+            self.active.discard(seq)
+            raise
         if type(step) is float:
             heapq.heappush(self.timers, (
                 time.monotonic() + step, next(self.tie), self._wake, seq, None))

@@ -52,3 +52,33 @@ def stub_server():
     server = StubHttpServer().start()
     yield server
     server.stop()
+
+
+@pytest.fixture()
+def sink_waits(monkeypatch):
+    """The waits the sink writer's retry steps yield, in order. The loop
+    gets 0.0 in place of each, so a test does not sleep through them."""
+    import flink_connector_http_spark.sink as sink_mod
+
+    waits = []
+    real = sink_mod.http_retry_steps
+
+    def recorded(*args, **kwargs):
+        steps = real(*args, **kwargs)
+        value = err = None
+        while True:
+            try:
+                step = steps.send(value) if err is None else steps.throw(err)
+            except StopIteration as stop:
+                return stop.value
+            value = err = None
+            if type(step) is float:
+                waits.append(step)
+                step = 0.0
+            try:
+                value = yield step
+            except Exception as exc:  # noqa: BLE001 — the steps classify it
+                err = exc
+
+    monkeypatch.setattr(sink_mod, "http_retry_steps", recorded)
+    return waits

@@ -173,6 +173,32 @@ def test_write_batched(spark, stub):
     assert sorted(p["id"] for p in payload) == list(range(10))
 
 
+def test_write_non_finite_doubles_as_strings(spark, stub):
+    """NaN and ±Infinity go out as the strings Spark's ``to_json`` writes,
+    so every body is RFC 8259 JSON; finite values stay numbers."""
+    stub.stub_json("/finite", {"ok": True})
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        [(1, nan, [1.5, nan]), (2, inf, [-inf]), (3, -inf, []), (4, 2.5, [0.5])],
+        "id BIGINT, score DOUBLE, scores ARRAY<DOUBLE>",
+    ).coalesce(1)
+    df.write.format("http").option("url", stub.url("/finite")).mode("append").save()
+
+    def bare_constant(token):
+        raise ValueError(f"bare {token} in the body")
+
+    rows = [
+        row for r in stub.recorded("/finite")
+        for row in json.loads(r.body, parse_constant=bare_constant)
+    ]
+    assert sorted(rows, key=lambda row: row["id"]) == [
+        {"id": 1, "score": "NaN", "scores": [1.5, "NaN"]},
+        {"id": 2, "score": "Infinity", "scores": ["-Infinity"]},
+        {"id": 3, "score": "-Infinity", "scores": []},
+        {"id": 4, "score": 2.5, "scores": [0.5]},
+    ]
+
+
 def test_write_overwrite_rejected(spark, stub):
     df = spark.createDataFrame([(1, "a", 1.0)], SCHEMA)
     with pytest.raises(Exception, match="append-only"):

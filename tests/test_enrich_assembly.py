@@ -15,7 +15,6 @@ from pyspark.sql import types as T
 
 from flink_connector_http_spark import HttpLookupOptions, HttpLookupTable
 from flink_connector_http_spark.lookup import _coerce, _EnrichConfig, _enrich_pdf, _extract_path
-from flink_connector_http_spark.retry import run_steps
 from flink_connector_http_spark.types import (
     METADATA_COLUMN_NAMES,
     HttpCompletionState,
@@ -58,7 +57,13 @@ class FakeClient:
         return result
 
     def run(self, sequences, **_):
-        return [run_steps(steps, attempt=None) for steps in sequences]
+        results = []
+        for steps in sequences:
+            try:
+                next(steps)
+            except StopIteration as stop:
+                results.append(stop.value)
+        return results
 
 
 def ok(*rows, headers=None):

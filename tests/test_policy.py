@@ -30,7 +30,6 @@ from flink_connector_http_spark.retry import (
     HttpRetryError,
     RetryConfig,
     retry_steps,
-    run_steps,
 )
 from flink_connector_http_spark.status import (
     HttpResponseChecker,
@@ -126,8 +125,23 @@ class TestSinkErrorCodeChecker:
 
 def _retried(send, *, sleep, **policy):
     """Call ``send`` under the retry policy, blocking: ``retry_steps``
-    yields ``send`` for each attempt and a float for each sleep."""
-    return run_steps(retry_steps(send, **policy), lambda call: call(), sleep)
+    yields ``send`` for each attempt (its result or exception goes back
+    in) and a float for each sleep."""
+    steps = retry_steps(send, **policy)
+    value = error = None
+    while True:
+        try:
+            step = steps.send(value) if error is None else steps.throw(error)
+        except StopIteration as stop:
+            return stop.value
+        value = error = None
+        if type(step) is float:
+            sleep(step)
+            continue
+        try:
+            value = step()
+        except Exception as exc:  # noqa: BLE001 — the policy classifies it
+            error = exc
 
 
 # --- R4: retry -------------------------------------------------------------------
@@ -683,24 +697,22 @@ class TestSinkRetryMaxBackoff:
         assert (HttpSinkOptions().retry_max_backoff
                 == RetryConfig().max_backoff == 60.0)
 
-    def test_caps_retry_after_hint(self, stub_server):
-        """Sink retry sleep = min(max(policy, Retry-After), cap) — the cap
+    def test_caps_retry_after_hint(self, stub_server, sink_waits):
+        """Sink retry wait = min(max(policy, Retry-After), cap) — the cap
         is now the configurable sink.retry-max-backoff, not a literal."""
-        from unittest import mock
-
         from flink_connector_http_spark.options import HttpSinkOptions
         from flink_connector_http_spark.sink import (
             HttpSinkRequestEntry, HttpSinkWriter,
         )
         from tests.stub_server import StubResponse, json_response
 
-        sleeps = []
+        sleeps = sink_waits
 
         # latch-tolerant scenario (not a fixed sequence): under full-suite
         # load a transport-level keep-alive resend can issue an extra wire
         # request, which would desynchronize a one-shot 503→200 sequence.
         # Keyed on writer-visible state instead: 503 until the writer has
-        # actually slept through the retry path, then 200 — extra or late
+        # waited through the retry path, then 200 — extra or late
         # requests can only see another 503/200, never shift the scenario.
         def responder(_req):
             if not sleeps:
@@ -715,12 +727,8 @@ class TestSinkRetryMaxBackoff:
                             retry_delay=0.01, retry_max_backoff=0.02),
             age_ticker=False,
         )
-        with mock.patch(
-            "flink_connector_http_spark.sink.time.sleep",
-            side_effect=lambda s: sleeps.append(s),
-        ):
-            writer.write(HttpSinkRequestEntry("POST", b'{"a": 1}'))
-            writer.close()
+        writer.write(HttpSinkRequestEntry("POST", b'{"a": 1}'))
+        writer.close()
         assert len(stub_server.recorded("/capped")) >= 2
         assert writer.send_errors == 0 and writer.records_sent == 1
         # min(max(policy=0.01, Retry-After=999), cap=0.02) == the cap
@@ -1060,7 +1068,7 @@ class TestNamedRequestCallbacks:
         opts.request_callback(None, None)
         assert fired == [1]
 
-    def test_sink_map_resolves_named_callback_and_writer_uses_it(self):
+    def test_sink_map_resolves_named_callback_and_writer_uses_it(self, stub_server):
         """The named sink callback fires per request through the writer
         (explicit on_response argument absent)."""
         from flink_connector_http_spark.options import sink_options_from_map
@@ -1078,14 +1086,8 @@ class TestNamedRequestCallbacks:
             {"http.sink.request-callback": "test-sink-cb"})
         assert options.request_callback is not None
 
-        class _FakeTransport:
-            def send(self, spec):
-                from flink_connector_http_spark.client import HttpResponse
-
-                return HttpResponse(200, [], b"{}")
-
-        writer = HttpSinkWriter("http://example.invalid/sink", options,
-                                transport=_FakeTransport(), age_ticker=False)
+        stub_server.stub_json("/sink", {})
+        writer = HttpSinkWriter(stub_server.url("/sink"), options, age_ticker=False)
         writer.write(HttpSinkRequestEntry("POST", b'{"a":1}'))
         writer.flush()
         writer.close()

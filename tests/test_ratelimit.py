@@ -8,6 +8,7 @@ the lookup client and the sink writer.
 """
 
 import json
+import threading
 import time
 
 import pytest
@@ -29,22 +30,35 @@ class FakeTimeline:
     def __init__(self):
         self.t = 0.0
         self.sleeps = []
+        self._lock = threading.Lock()
 
     def clock(self):
         return self.t
 
     def sleep(self, seconds):
-        self.sleeps.append(seconds)
-        self.t += seconds
+        with self._lock:
+            self.sleeps.append(seconds)
+            self.t += seconds
 
     def bucket(self, rate, burst=None):
-        return TokenBucket(rate, burst, clock=self.clock, sleep=self.sleep)
+        return TokenBucket(rate, burst, clock=self.clock)
+
+    def acquire(self, bucket):
+        """Take one permit, sleeping until it is due, as a blocking caller
+        of ``try_acquire`` would; returns the time slept."""
+        slept = 0.0
+        while True:
+            wait = bucket.try_acquire()
+            if not wait:
+                return slept
+            self.sleep(wait)
+            slept += wait
 
 
 class GrantCounter(TokenBucket):
     """A real-clock bucket that counts the permits it grants. The lookup
-    client's loop waits for a permit on a timer (``try_acquire``), not
-    through the bucket's ``sleep``, so a fake clock would never advance."""
+    client's loop waits for a permit on a timer (``try_acquire``), so a
+    fake clock would never advance."""
 
     granted = 0
 
@@ -59,10 +73,10 @@ class TestTokenBucket:
     def test_burst_spends_free_then_steady_rate(self):
         tl = FakeTimeline()
         bucket = tl.bucket(rate=10, burst=2)
-        assert bucket.acquire() == 0.0
-        assert bucket.acquire() == 0.0          # burst headroom
-        assert bucket.acquire() == pytest.approx(0.1)  # 1/rate per permit
-        assert bucket.acquire() == pytest.approx(0.1)
+        assert tl.acquire(bucket) == 0.0
+        assert tl.acquire(bucket) == 0.0          # burst headroom
+        assert tl.acquire(bucket) == pytest.approx(0.1)  # 1/rate per permit
+        assert tl.acquire(bucket) == pytest.approx(0.1)
         assert tl.sleeps == pytest.approx([0.1, 0.1])
 
     def test_try_acquire_never_sleeps(self):
@@ -80,31 +94,31 @@ class TestTokenBucket:
         tl = FakeTimeline()
         bucket = tl.bucket(rate=10, burst=3)
         for _ in range(3):
-            bucket.acquire()
+            tl.acquire(bucket)
         tl.t += 100.0                            # long idle: refill caps at burst
         for _ in range(3):
-            assert bucket.acquire() == 0.0
-        assert bucket.acquire() == pytest.approx(0.1)
+            assert tl.acquire(bucket) == 0.0
+        assert tl.acquire(bucket) == pytest.approx(0.1)
 
     def test_first_acquire_sees_only_burst_not_elapsed_time(self):
         tl = FakeTimeline()
         tl.t = 500.0                             # bucket created "late" in the task
         bucket = tl.bucket(rate=1, burst=1)
-        assert bucket.acquire() == 0.0
-        assert bucket.acquire() == pytest.approx(1.0)
+        assert tl.acquire(bucket) == 0.0
+        assert tl.acquire(bucket) == pytest.approx(1.0)
 
     def test_default_burst_is_one_second_of_rate(self):
         tl = FakeTimeline()
         bucket = tl.bucket(rate=5)
         for _ in range(5):
-            assert bucket.acquire() == 0.0
-        assert bucket.acquire() == pytest.approx(0.2)
+            assert tl.acquire(bucket) == 0.0
+        assert tl.acquire(bucket) == pytest.approx(0.2)
 
     def test_sub_one_rate_gets_burst_of_one(self):
         tl = FakeTimeline()
         bucket = tl.bucket(rate=0.5)
-        assert bucket.acquire() == 0.0
-        assert bucket.acquire() == pytest.approx(2.0)
+        assert tl.acquire(bucket) == 0.0
+        assert tl.acquire(bucket) == pytest.approx(2.0)
 
     def test_invalid_config_rejected(self):
         with pytest.raises(ValueError):
@@ -115,18 +129,10 @@ class TestTokenBucket:
             TokenBucket(1, burst=0)
 
     def test_thread_safety_exact_accounting(self):
-        import threading
-
         tl = FakeTimeline()
-        lock = threading.Lock()
-
-        def locked_sleep(seconds):
-            with lock:
-                tl.sleep(seconds)
-
-        bucket = TokenBucket(100, burst=1, clock=tl.clock, sleep=locked_sleep)
+        bucket = tl.bucket(100, burst=1)
         threads = [
-            threading.Thread(target=lambda: [bucket.acquire() for _ in range(10)])
+            threading.Thread(target=lambda: [tl.acquire(bucket) for _ in range(10)])
             for _ in range(4)
         ]
         for th in threads:
@@ -215,23 +221,34 @@ class TestClientWiring:
 
 
 class TestSinkWiring:
-    def test_sink_writer_throttles_requests(self, stub_server):
+    def test_sink_writer_throttles_requests(self, stub_server, monkeypatch):
         stub_server.stub_json("/sink", {"ok": True})
         writer = HttpSinkWriter(
             stub_server.url("/sink"),
             HttpSinkOptions(request_mode="single", rate_limit=10,
-                            max_time_in_buffer=0),
+                            rate_limit_burst=1, max_time_in_buffer=0),
         )
         assert writer.rate_limiter is not None
-        tl = FakeTimeline()
-        writer.rate_limiter = tl.bucket(rate=10, burst=1)
+        granted = []
+        try_acquire = writer.rate_limiter.try_acquire
+
+        def counted(permits=1.0):
+            wait = try_acquire(permits)
+            if not wait:
+                granted.append(time.monotonic())
+            return wait
+
+        monkeypatch.setattr(writer.rate_limiter, "try_acquire", counted)
         for i in range(3):
             writer.write(HttpSinkRequestEntry(
                 method="POST", payload=json.dumps({"i": i}).encode()
             ))
         writer.close()
         assert len(stub_server.recorded("/sink")) == 3
-        assert tl.sleeps == pytest.approx([0.1, 0.1])
+        # one permit per request; the loop waits for each on a timer, so
+        # three at 10/s with a burst of 1 take two waits of 0.1 s
+        assert len(granted) == 3
+        assert granted[-1] - granted[0] >= 0.199
 
     def test_sink_writer_unlimited_by_default(self, stub_server):
         stub_server.stub_json("/sink", {"ok": True})
@@ -253,9 +270,9 @@ class TestTokenBucketProperties:
         )
         def check(rate, burst, n):
             tl = FakeTimeline()
-            bucket = TokenBucket(rate, burst, clock=tl.clock, sleep=tl.sleep)
+            bucket = tl.bucket(rate, burst)
             for _ in range(n):
-                bucket.acquire()
+                tl.acquire(bucket)
             # permits granted over the elapsed fake-time window can never
             # beat the configured envelope burst + rate*t ...
             assert n <= burst + rate * tl.t + 1e-6 * max(1.0, rate * tl.t)

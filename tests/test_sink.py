@@ -182,24 +182,19 @@ class TestStreamingSink:
         assert len(set(values)) == len(values)  # each value delivered once here
 
 
-class GateTransport:
-    """Transport whose sends block until the gate opens — lets tests hold
-    requests in flight deterministically."""
+def gated(stub_server, path):
+    """Stub ``path`` to answer only once the returned gate opens — lets
+    tests hold requests in flight deterministically."""
+    import threading
 
-    def __init__(self):
-        import threading
+    gate = threading.Event()
 
-        self.gate = threading.Event()
-        self.sent = []
-        self._lock = threading.Lock()
+    def responder(_req):
+        gate.wait(timeout=10)
+        return json_response({"ok": True})
 
-    def send(self, spec):
-        from flink_connector_http_spark.client import HttpResponse
-
-        self.gate.wait(timeout=10)
-        with self._lock:
-            self.sent.append(spec)
-        return HttpResponse(200, [], b"{}")
+    stub_server.stub(path, responder)
+    return gate
 
 
 class TestFlushTriggers:
@@ -260,32 +255,115 @@ class TestFlushTriggers:
         assert stub_server.recorded("/sink"), "ticker never flushed aged buffer"
         writer.close()
 
-    def test_max_buffered_blocks_write_until_capacity(self):
+    def test_ticker_failure_raised_by_close(self, stub_server):
+        """A callback error on a request the age ticker sent is raised by
+        ``close``, as one on the task thread would be."""
+        import time as _time
+
+        stub_server.stub_json("/sink", {"ok": True})
+
+        def broken(_spec, _response):
+            raise RuntimeError("callback failed")
+
+        writer = HttpSinkWriter(
+            stub_server.url("/sink"),
+            HttpSinkOptions(batch_size=100, max_time_in_buffer=0.1),
+            on_response=broken,
+        )
+        writer.write(entries(1)[0])
+        deadline = _time.time() + 5
+        while _time.time() < deadline and not stub_server.recorded("/sink"):
+            _time.sleep(0.05)
+        assert stub_server.recorded("/sink"), "ticker never flushed aged buffer"
+        with pytest.raises(RuntimeError, match="callback failed"):
+            writer.close()
+
+    def test_max_buffered_blocks_write_until_capacity(self, stub_server):
         import threading
 
-        transport = GateTransport()
+        gate = gated(stub_server, "/gated")
         writer = HttpSinkWriter(
-            "http://unused/sink",
+            stub_server.url("/gated"),
             HttpSinkOptions(
                 batch_size=1, max_inflight=10, max_buffered=2,
                 max_time_in_buffer=0.0,
             ),
-            transport=transport,
             age_ticker=False,
         )
         es = entries(3)
-        writer.write(es[0])  # flushes immediately (batch_size=1) -> in flight
-        writer.write(es[1])  # second in flight; outstanding == max_buffered
+        writer.write(es[0])
+        writer.write(es[1])  # outstanding == max_buffered
         blocked = threading.Thread(target=writer.write, args=(es[2],))
         blocked.start()
         blocked.join(timeout=0.3)
         assert blocked.is_alive(), "write should block at the buffered cap"
-        transport.gate.set()
+        gate.set()
         blocked.join(timeout=10)
         assert not blocked.is_alive()
         writer.close()
-        assert len(transport.sent) == 3
+        assert len(stub_server.recorded("/gated")) == 3
         assert writer.records_sent == 3
+
+    @pytest.mark.parametrize("pool, inflight", [(3, 5), (4, 2)])
+    def test_requests_on_the_wire_bounded_by_pool_and_inflight(
+            self, stub_server, pool, inflight):
+        """``writer_pool_size`` requests are on the wire at once, and no
+        more; no more than ``max_inflight`` are outstanding."""
+        import threading
+        import time as _time
+
+        lock = threading.Lock()
+        on_wire = {"now": 0, "peak": 0}
+
+        def responder(_req):
+            with lock:
+                on_wire["now"] += 1
+                on_wire["peak"] = max(on_wire["peak"], on_wire["now"])
+            _time.sleep(0.1)
+            with lock:
+                on_wire["now"] -= 1
+            return json_response({"ok": True})
+
+        stub_server.stub("/wide", responder)
+        writer = HttpSinkWriter(
+            stub_server.url("/wide"),
+            HttpSinkOptions(batch_size=1, flush_batch_size=1,
+                            writer_pool_size=pool, max_inflight=inflight,
+                            max_time_in_buffer=0.0),
+        )
+        outstanding = []
+        for e in entries(12):
+            writer.write(e)
+            outstanding.append(writer._loop.pending)
+        writer.close()
+        assert writer.records_sent == 12 and writer.requests_sent == 12
+        assert on_wire["peak"] == min(pool, inflight)
+        assert max(outstanding) == inflight
+
+    def test_no_age_deadline_starts_no_thread(self, stub_server, monkeypatch):
+        import threading
+
+        me = threading.current_thread()
+        started = []
+        real_start = threading.Thread.start
+
+        def start(thread):
+            if threading.current_thread() is me:
+                started.append(thread.name)
+            return real_start(thread)
+
+        monkeypatch.setattr(threading.Thread, "start", start)
+        stub_server.stub_json("/quiet", {"ok": True})
+        writer = HttpSinkWriter(
+            stub_server.url("/quiet"),
+            HttpSinkOptions(batch_size=2, flush_batch_size=2,
+                            max_time_in_buffer=0.0),
+        )
+        for e in entries(7):
+            writer.write(e)
+        writer.close()
+        assert writer.records_sent == 7 and writer.requests_sent == 4
+        assert started == []
 
 
 class TestOptInSinkRetry:
@@ -308,6 +386,26 @@ class TestOptInSinkRetry:
         assert len(stub_server.recorded("/sink-retry")) == 3
         assert writer.send_errors == 0 and writer.records_sent == 1
         assert writer.requests_sent == 3
+
+    def test_every_attempt_reaches_on_response(self, stub_server):
+        """A request retried after a 503 fires the callback and counts as
+        a sent request on both attempts."""
+        stub_server.stub_sequence("/sink-seen", [
+            StubResponse(status=503, body=b""),
+            json_response({"ok": True}),
+        ])
+        seen = []
+        writer = HttpSinkWriter(
+            stub_server.url("/sink-seen"),
+            HttpSinkOptions(request_mode="single", max_retries=1,
+                            retry_delay=0.01, max_time_in_buffer=0.0),
+            on_response=lambda spec, resp: seen.append((spec.method, resp.status)),
+        )
+        writer.write(entries(1)[0])
+        writer.close()
+        assert seen == [("POST", 503), ("POST", 200)]
+        assert writer.requests_sent == 2
+        assert writer.records_sent == 1 and writer.send_errors == 0
 
     def test_retry_exhausted_counts_errors_once(self, stub_server):
         stub_server.stub_json("/sink-dead", {"err": True}, status=500)
@@ -356,13 +454,10 @@ class TestOptInSinkRetry:
         assert opts.retry_backoff_multiplier == 3.0
 
 
-def test_sink_retry_honors_retry_after_hint(stub_server, monkeypatch):
-    """A 429 carrying Retry-After stretches the sink's next retry sleep
+def test_sink_retry_honors_retry_after_hint(stub_server, sink_waits):
+    """A 429 carrying Retry-After stretches the sink's next retry wait
     to the hint (capped; never faster than policy)."""
-    import flink_connector_http_spark.sink as sink_mod
-
-    sleeps = []
-    monkeypatch.setattr(sink_mod.time, "sleep", sleeps.append)
+    sleeps = sink_waits
     stub_server.stub_sequence("/sink-429", [
         StubResponse(status=429, body=b"", headers={"Retry-After": "3"}),
         StubResponse(status=429, body=b""),

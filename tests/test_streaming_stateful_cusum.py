@@ -84,7 +84,6 @@ def test_cusum_keys_are_independent(spark, tmp_path):
         "append"
     ).parquet(str(in_dir))
     query = _start(spark, in_dir, tmp_path / "ckpt", "cusum_k")
-    query.awaitTermination(120)
     try:
         query.processAllAvailable()
         got = {(r.key, r.event_id) for r in spark.table("cusum_k").collect()}

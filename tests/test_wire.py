@@ -17,9 +17,7 @@ import time
 import pandas as pd
 import pytest
 
-from flink_connector_http_spark.client import (
-    HttpTransport, http_retry_steps, send_with_retry,
-)
+from flink_connector_http_spark.client import HttpTransport, http_retry_steps
 from flink_connector_http_spark.request import HttpRequestSpec
 from flink_connector_http_spark.retry import HttpRetryError, RetryConfig
 
@@ -179,11 +177,11 @@ def test_truncated_body_is_a_retried_transport_error(raw_server):
         [b"HTTP/1.1 200 OK\r\nContent-Length: 10\r\n\r\nabcd"], close_after=True))
     transport = HttpTransport(timeout=5)
     with pytest.raises(HttpRetryError) as err:
-        send_with_retry(
-            transport.send, _get(server.url()),
+        transport.run([http_retry_steps(
+            _get(server.url()),
             config=RetryConfig(max_retries=1, fixed_delay=0.0),
             is_retriable_status=lambda status: False,
-        )
+        )])
     assert isinstance(err.value.cause, http.client.IncompleteRead)
     assert len(server.requests) == 2  # the attempt and its one retry
 
