@@ -35,7 +35,7 @@ LOOKUP_OPTION_KEYS = {
     "method": "lookup-method",  # HttpLookupConnectorOptions.java:72-76
     "method_long": "http.source.lookup.method",  # accepted alias (this repo)
     "request_timeout": "http.source.lookup.request.timeout",
-    # connect-phase-only deadline (HttpLookupConnectorOptions.java:129-133
+    # connect-phase-only timeout (HttpLookupConnectorOptions.java:129-133
     # SOURCE_LOOKUP_CONNECTION_TIMEOUT → JavaNetHttpClientFactory.java:71-72
     # clientBuilder.connectTimeout); distinct from the whole-request timeout
     "connection_timeout": "http.source.lookup.connection.timeout",
@@ -206,8 +206,8 @@ class HttpLookupOptions:
 
     method: str = "GET"
     request_timeout: float = 30.0                     # seconds
-    # Connect-phase deadline in seconds (TCP connect + TLS handshake —
-    # the same connection-establishment window Java 11's
+    # Connect-phase timeout in seconds: the longest wait of the TCP connect,
+    # proxy tunnel or TLS handshake for the endpoint (the window Java 11's
     # HttpClient.connectTimeout governs). None = reference default: no
     # separate connect deadline, the whole-request timeout covers it.
     # Tune this, not request_timeout, for fast failover off a dead

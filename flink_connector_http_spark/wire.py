@@ -26,12 +26,15 @@ http targets, a CONNECT tunnel for https ones, each with a preemptive
 (``utils/JavaNetHttpClientFactory.java:74-94``).
 
 Timeouts (``http.source.lookup.connection.timeout`` →
-``HttpLookupConnectorOptions.java:129-133``): the TCP connect, the proxy
-tunnel and the TLS handshake run under ``connect_timeout`` (or ``timeout``
-when it is unset); after that, an attempt fails once its socket has been
-inactive for ``timeout``. An idempotent request whose reused keep-alive
-socket turns out dead (reset, or closed before any response) is re-sent
-once on a fresh socket; a POST is not, and nothing is after a timeout.
+``HttpLookupConnectorOptions.java:129-133``): each wait of an attempt for
+the endpoint lasts at most ``connect_timeout`` (or ``timeout`` when unset)
+while it connects (TCP, proxy tunnel, TLS handshake), then ``timeout``,
+counted from when the loop last moved the attempt on. The loop reads ready
+sockets before it fails overdue ones, so a loop nobody turned for a while
+times out no endpoint that answered in time. An idempotent request whose
+reused keep-alive socket turns out dead (reset, or closed before any
+response) is re-sent once on a fresh socket; a POST is not, and nothing is
+after a timeout.
 """
 
 from __future__ import annotations
@@ -201,29 +204,29 @@ def _parse_head(block) -> Tuple[str, int, List[Tuple[str, str]]]:
 # --- socket I/O generators: yield (socket, event, due) while they wait --------
 
 
-def _send_all(sock, data: bytes, timeout: float, due: Optional[float] = None):
+def _send_all(sock, data: bytes, timeout: float):
     view = memoryview(data)
     sent = 0
     while sent < len(view):
         try:
             sent += sock.send(view[sent:])
         except (BlockingIOError, ssl.SSLWantWriteError):
-            yield sock, _WRITE, due or time.monotonic() + timeout
+            yield sock, _WRITE, time.monotonic() + timeout
         except ssl.SSLWantReadError:
-            yield sock, _READ, due or time.monotonic() + timeout
+            yield sock, _READ, time.monotonic() + timeout
 
 
-def _fill(sock, buf: bytearray, timeout: float, due: Optional[float] = None):
+def _fill(sock, buf: bytearray, timeout: float):
     """Append the next bytes ``sock`` has to ``buf``, waiting for them;
     returns False at end of stream."""
     while True:
         try:
             chunk = sock.recv(_RECV_SIZE)
         except (BlockingIOError, ssl.SSLWantReadError):
-            yield sock, _READ, due or time.monotonic() + timeout
+            yield sock, _READ, time.monotonic() + timeout
             continue
         except ssl.SSLWantWriteError:
-            yield sock, _WRITE, due or time.monotonic() + timeout
+            yield sock, _WRITE, time.monotonic() + timeout
             continue
         if not chunk:
             return False
@@ -319,7 +322,7 @@ class HttpTransport:
         proxy_password: Optional[str] = None,
     ) -> None:
         self.timeout = timeout
-        # connect-phase deadline (TCP connect, proxy tunnel, TLS handshake);
+        # connect-phase timeout (TCP connect, proxy tunnel, TLS handshake);
         # None = the request timeout covers it, the reference's default
         self.connect_timeout = connect_timeout
         self._ssl_context = build_ssl_context(
@@ -343,7 +346,8 @@ class HttpTransport:
     def send(self, spec: HttpRequestSpec) -> HttpResponse:
         """One wire attempt, blocking; non-2xx responses return normally
         (policy classification happens upstream, like the reference's
-        client)."""
+        client). Kept for tests and perfbench's ``TracedTransport``: the
+        engine runs its retry steps on loops."""
         return self.run((_single(spec),))[0]
 
     def run(
@@ -468,10 +472,9 @@ class HttpTransport:
     # -- one wire attempt ------------------------------------------------------------
 
     def _establish(self, conn: _Conn, req: _Request):
-        """Connect ``conn``: TCP, then the proxy tunnel, then TLS, all under
-        the connect-phase deadline. Returns the socket."""
-        due = time.monotonic() + (
-            self.timeout if self.connect_timeout is None else self.connect_timeout)
+        """Connect ``conn``: TCP, then the proxy tunnel, then TLS, each wait
+        under the connect-phase timeout. Returns the socket."""
+        timeout = self.timeout if self.connect_timeout is None else self.connect_timeout
         host, port = self._proxy or (req.host, req.port)
         last_err: Optional[OSError] = None
         for family, kind, proto, _name, addr in socket.getaddrinfo(
@@ -483,7 +486,7 @@ class HttpTransport:
                 sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
                 err = sock.connect_ex(addr)
                 if err in _IN_PROGRESS:
-                    yield sock, _WRITE, due
+                    yield sock, _WRITE, time.monotonic() + timeout
                     err = sock.getsockopt(socket.SOL_SOCKET, socket.SO_ERROR)
                 if err:
                     raise OSError(err, os.strerror(err))
@@ -494,10 +497,10 @@ class HttpTransport:
         else:
             raise last_err or OSError(f"no address for {host}:{port}")
         if req.tunnel is not None:
-            yield from _send_all(sock, req.tunnel, 0.0, due)
+            yield from _send_all(sock, req.tunnel, timeout)
             buf = bytearray()
             while b"\r\n\r\n" not in buf:
-                if not (yield from _fill(sock, buf, 0.0, due)):
+                if not (yield from _fill(sock, buf, timeout)):
                     raise OSError("Tunnel connection failed: proxy closed the connection")
             _version, status, _headers = _parse_head(buf[: buf.find(b"\r\n\r\n")])
             if not 200 <= status < 300:
@@ -511,9 +514,9 @@ class HttpTransport:
                     sock.do_handshake()
                     break
                 except ssl.SSLWantReadError:
-                    yield sock, _READ, due
+                    yield sock, _READ, time.monotonic() + timeout
                 except ssl.SSLWantWriteError:
-                    yield sock, _WRITE, due
+                    yield sock, _WRITE, time.monotonic() + timeout
         return sock
 
     def _exchange_io(self, conn: _Conn, req: _Request):

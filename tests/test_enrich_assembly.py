@@ -63,6 +63,8 @@ class FakeClient:
                 next(steps)
             except StopIteration as stop:
                 results.append(stop.value)
+            else:
+                raise AssertionError("FakeClient got a wire attempt")
         return results
 
 

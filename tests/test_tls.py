@@ -11,6 +11,7 @@ enforcement — here generated in-fixture with ``cryptography``.
 import datetime
 import ipaddress
 import ssl
+import time
 
 import pytest
 
@@ -192,6 +193,42 @@ class TestMutualTls:
             writer.close()
             assert writer.records_sent == 1
             assert writer.send_errors == 0
+        finally:
+            server.stop()
+
+    def test_sink_handshake_survives_slow_upstream(self, certs):
+        """Without an age ticker the writer's loop moves only when rows
+        arrive: a handshake that nobody looked at for longer than the
+        request timeout still completes, since the endpoint answered each
+        step in time."""
+        from flink_connector_http_spark import HttpSinkOptions, HttpSinkRequestEntry
+        from flink_connector_http_spark.sink import HttpSinkWriter
+
+        context = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
+        context.load_cert_chain(certs["server_chain"])
+        # TLS 1.2: the client waits for the server twice in the handshake
+        context.maximum_version = ssl.TLSVersion.TLSv1_2
+        server = StubHttpServer(ssl_context=context).start()
+        server.stub_json("/secure", {})
+        try:
+            writer = HttpSinkWriter(
+                server.url("/secure"),
+                HttpSinkOptions(
+                    batch_size=2,
+                    flush_batch_size=2,
+                    max_time_in_buffer=0,
+                    request_timeout=0.3,
+                    server_ca=certs["ca"],
+                ),
+            )
+            for _ in range(3):
+                writer.write(HttpSinkRequestEntry("POST", b'{"x":1}'))
+                writer.write(HttpSinkRequestEntry("POST", b'{"x":2}'))
+                time.sleep(0.6)
+            writer.close()
+            assert writer.send_errors == 0
+            assert writer.records_sent == 6
+            assert len(server.recorded("/secure")) == 3
         finally:
             server.stop()
 

@@ -4,8 +4,9 @@ against raw-socket servers that write exactly the bytes under test.
 Covers the body framings (Content-Length, chunked, close-delimited) and
 the no-body responses (204, 304, HEAD), a truncated body, a keep-alive
 socket the server closed while idle, the loop's deadline against a hung
-endpoint and against rate-limiter waits, a CONNECT-proxy round trip, and
-that an async per-key lookup batch runs on the calling thread alone.
+endpoint and against rate-limiter waits, a CONNECT-proxy round trip, a
+connect nobody turned for longer than its timeout, and that an async
+per-key lookup batch runs on the calling thread alone.
 """
 
 import gzip
@@ -397,19 +398,15 @@ def _self_signed_context(tmp_path):
     return context
 
 
-def test_connect_proxy_round_trip(raw_server, tmp_path):
-    """An https request through a proxy opens a CONNECT tunnel (with the
-    proxy credentials), runs TLS inside it, and keeps the tunnel alive."""
-    from flink_connector_http_spark.testing import StubHttpServer
-
-    upstream = StubHttpServer(ssl_context=_self_signed_context(tmp_path)).start()
-    upstream.stub_json("/secure", {"ok": True})
-
+def _tunnel(delay=0.0):
+    """A CONNECT proxy handler: answers the CONNECT after ``delay`` seconds,
+    then pumps bytes both ways."""
     def tunnel(conn, server):
         line, headers, _ = read_request(conn)
         server.requests.append((line, headers))
         host, _, port = line.split(" ")[1].partition(":")
         with socket.create_connection((host, int(port))) as target:
+            time.sleep(delay)
             conn.sendall(b"HTTP/1.1 200 Connection established\r\n\r\n")
 
             def pump(src, dst):
@@ -430,8 +427,17 @@ def test_connect_proxy_round_trip(raw_server, tmp_path):
             back.start()
             pump(conn, target)
             back.join(5)
+    return tunnel
 
-    proxy = raw_server(tunnel)
+
+def test_connect_proxy_round_trip(raw_server, tmp_path):
+    """An https request through a proxy opens a CONNECT tunnel (with the
+    proxy credentials), runs TLS inside it, and keeps the tunnel alive."""
+    from flink_connector_http_spark.testing import StubHttpServer
+
+    upstream = StubHttpServer(ssl_context=_self_signed_context(tmp_path)).start()
+    upstream.stub_json("/secure", {"ok": True})
+    proxy = raw_server(_tunnel())
     transport = HttpTransport(
         timeout=5, allow_self_signed=True, proxy_host="127.0.0.1",
         proxy_port=proxy.port, proxy_user="alice", proxy_password="s3cret")
@@ -445,6 +451,33 @@ def test_connect_proxy_round_trip(raw_server, tmp_path):
         assert headers["proxy-authorization"] == "Basic YWxpY2U6czNjcmV0"
         assert [r.query for r in upstream.recorded("/secure")] == [{"k": ["1"]}] * 2
     finally:
+        transport.close()
+        upstream.stop()
+
+
+def test_connect_steps_unwatched_past_the_timeout(raw_server, tmp_path):
+    """Nobody turns the loop while the proxy answers the CONNECT and for
+    longer than the timeout after it. The endpoint answered each step in
+    time, so the tunnel and TLS handshake still complete: each connect
+    step waits at most the timeout from when the loop last moved it on."""
+    from flink_connector_http_spark.testing import StubHttpServer
+
+    upstream = StubHttpServer(ssl_context=_self_signed_context(tmp_path)).start()
+    upstream.stub_json("/secure", {"ok": True})
+    proxy = raw_server(_tunnel(delay=0.05))
+    transport = HttpTransport(
+        timeout=0.3, allow_self_signed=True, proxy_host="127.0.0.1",
+        proxy_port=proxy.port)
+    loop = transport.loop()
+    results = []
+    try:
+        loop.add(retry_steps_of(_get(upstream.url("/secure"))), results.append)
+        loop.turn(block=False)
+        time.sleep(0.6)
+        assert loop.drain()
+        assert [r.body for r in results] == [b'{"ok": true}']
+    finally:
+        loop.close()
         transport.close()
         upstream.stop()
 
